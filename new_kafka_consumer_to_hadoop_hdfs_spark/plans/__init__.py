@@ -5,378 +5,94 @@ and ``ORACLES: dict[str, str]`` (DuckDB-runnable ANSI SQL over the
 testdata views). ``__spark_entry__.py`` re-exports the merged registry
 for the driver's correctness harness; tests run the same comparison
 locally.
+
+Check window. Each round's correctness harness oracle-checks only the
+FIRST 50 entries of ``merged_registry()``, so iteration order decides
+which queries earn fresh evidence. The order is a staleness rotation
+derived from the committed ``CORRECTNESS_r{N}.json`` files (one per
+round) at the repo root:
+
+1. never-checked (no passing row) and plan-changed queries lead;
+2. the rest follow, oldest last passing row first;
+3. module registration order breaks ties.
+
+A row is evidence unless one of ``rows_match``/``schema_match``/
+``hash_match`` is ``False`` or ``err`` is set to anything other than
+``"no_oracle"`` (the rows-only sketches), so a query that failed its
+check leads the next window. Committing a round's CORRECTNESS file is
+the whole update.
+
+``tools/plan_changed.json`` maps a query to the round its plan or oracle
+changed in; the query stays at priority 0 while its last passing row is
+from that round or earlier, so the entry expires once the next round
+checks it. ``tools/plan_fingerprints.py --write`` stamps every query
+whose plan fingerprint moved (or is new) with the newest round on disk
+and drops expired entries. Oracle-SQL edits are not fingerprinted: add
+such a query to the map by hand, stamped with the newest round.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import json
+import pathlib
+import re
+from collections.abc import Callable, Iterable, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
-# The driver's correctness harness oracle-checks only the FIRST 50
-# entries of ``merged_registry()`` per round, so iteration order decides
-# which queries earn hard driver evidence. Round 6 on, the ordering is a
-# pure STALENESS rotation (VERDICT r5 item 3): queries sort by the round
-# of their most recent driver CORRECTNESS row, oldest first, with
-# never-checked (newly added) queries leading. The ``DRIVER_CHECKED_*``
-# sets below record which round last checked each query; when a round's
-# CORRECTNESS_r{N}.json lands, bank its 50 names as the freshest set and
-# the sort does the rest.
-#
-# Round-6 window arithmetic: 31 queries' latest row is r3-era
-# (R2_R3 minus the 19 re-checked in r5) — they lead, followed by the r4
-# cohort in module order; each NEW query added this round takes one
-# window slot from the r4 cohort's tail, so keep new oracle-backed
-# queries per round ≤ 19 or the stalest cohort starts spilling out.
-
-# Checked in rounds 2-3 (identical set both rounds: the then-first-50).
-DRIVER_CHECKED_R2_R3 = frozenset({
-    "kafka_dedup_lww", "kafka_dedup_global", "kafka_parse_project",
-    "q1_pricing_summary", "q6_forecast_revenue",
-    "agg_count_distinct", "agg_approx_count_distinct", "agg_rollup",
-    "agg_cube", "agg_percentiles", "agg_argmax", "agg_approx_percentiles",
-    "agg_hll_union_rollup", "agg_grouping_sets", "agg_pivot", "agg_unpivot",
-    "q3_shipping_priority", "q5_local_supplier_volume",
-    "q4_order_priority", "q7_volume_shipping", "q10_returned_items",
-    "q12_shiplag_priority", "q14_promo_effect", "q17_small_quantity_revenue",
-    "q18_large_volume_customer", "q19_disjunctive_predicates",
-    "q22_global_sales_opportunity",
-    "join_broadcast_dims", "join_semi", "join_anti", "join_left_outer",
-    "join_right_outer", "join_full_outer", "join_range_events",
-    "window_topk_per_group", "window_running_sum", "window_range_frame",
-    "window_lag_lead_rank", "window_asof_last_event",
-    "window_distribution_functions",
-    "scalar_date_advanced", "scalar_string_advanced", "scalar_null_semantics",
-    "scalar_string_functions", "scalar_date_functions",
-    "scalar_math_functions", "scalar_json_functions", "scalar_json_struct_map",
-    "sort_topk_global", "set_operations",
-})
-
-# Checked in round 4 (CORRECTNESS_r04.json: 49 hash-green, dedup_simhash
-# rows-only-by-design with 17 rows / no err).
-DRIVER_CHECKED_R4 = frozenset({
-    "scalar_case_null_handling", "agg_salted_skew", "sql_adhoc_star_join",
-    "q2_min_cost_supplier", "q8_market_share", "q9_product_profit",
-    "q11_important_value", "q13_customer_distribution", "q15_top_supplier",
-    "q16_supplier_part_count", "q20_excess_shipments", "q21_waiting_suppliers",
-    "text_stats", "text_token_histogram", "text_language_id",
-    "text_quality_score", "text_token_count", "text_fingerprint",
-    "dedup_exact_docs", "dedup_exact_events", "dedup_near_minhash",
-    "dedup_ngram_jaccard", "text_tfidf_keywords", "pipeline_quality_filter",
-    "pipeline_similar_docs_report", "pipeline_mix_languages",
-    "pipeline_pack_sequences", "text_repetition_stats",
-    "pipeline_decontaminate", "dedup_embedding_cosine",
-    "pipeline_corpus_dedup", "scalar_array_functions", "sim_topk_cosine",
-    "sim_topk_cosine_arrow", "sim_topk_cosine_int8",
-    "sim_topk_cosine_int8_stored", "sim_topk_cosine_mapside",
-    "sim_recall_report", "pipeline_train_val_split",
-    "pipeline_stratified_sample", "pipeline_incremental_dedup",
-    "text_winnow_fingerprint", "event_tumbling_window",
-    "event_sliding_window", "event_session_window", "event_time_rollup",
-    "multimodal_binary_stats", "multimodal_resize", "multimodal_frame_sample",
-    "dedup_simhash",
-})
-
-# Checked in round 5 (CORRECTNESS_r05.json: 45 hash-green + 5
-# rows-only-by-design, zero failures) — the freshest driver evidence.
-# 19 of these are r2/r3-era queries rotated back in; the other 31 were
-# round 5's new or never-checked queries.
-DRIVER_CHECKED_R5 = frozenset({
-    "agg_cube", "dedup_containment", "dedup_embedding_lsh",
-    "dedup_span_duplication", "event_anomaly_zscore", "event_funnel_stages",
-    "event_gapfill_locf", "event_retention_cohorts", "event_user_paths",
-    "join_bucketed_colocated", "join_full_outer", "join_range_events",
-    "kafka_dedup_global", "kafka_dedup_lww", "kafka_parse_project",
-    "multimodal_feature_extract", "pipeline_cdc_merge", "pipeline_chunk_sliding",
-    "pipeline_corpus_diff", "pipeline_dataset_card", "pipeline_dedup_keep_best",
-    "pipeline_graph_pagerank", "pipeline_outlier_filter", "pipeline_pii_scrub",
-    "pipeline_quality_buckets", "pipeline_token_budget_select",
-    "pipeline_token_budget_threshold",
-    "pipeline_weighted_sample", "q1_pricing_summary", "q22_global_sales_opportunity",
-    "q3_shipping_priority", "q5_local_supplier_volume", "q6_forecast_revenue",
-    "scalar_date_advanced", "scalar_json_struct_map", "scalar_string_advanced",
-    "scan_partition_pruned", "set_operations", "sim_topk_ivf",
-    "sim_topk_ivf_kmeans", "sim_topk_lsh", "sink_csv_roundtrip",
-    "sink_jsonl_roundtrip", "text_bigram_surprisal", "text_heavy_hitters",
-    "text_zipf_slope", "window_asof_last_event", "window_distribution_functions",
-    "window_range_frame", "window_topk_per_group",
-})
+_REPO = pathlib.Path(__file__).resolve().parents[2]
+_ROUND_FILE = re.compile(r"CORRECTNESS_r(\d+)\.json")
+PLAN_CHANGED = pathlib.Path("tools", "plan_changed.json")
 
 
-# Checked in round 6 (CORRECTNESS_r06.json: 45 hash-green + 5
-# rows-only-by-design, zero failures) — the freshest driver evidence.
-# 41 of these are the r3-era stale cohort + r4 head rotated back in;
-# the other 9 were round 6's new queries.
-DRIVER_CHECKED_R6 = frozenset({
-    "agg_approx_count_distinct", "agg_approx_percentiles", "agg_argmax",
-    "agg_count_distinct", "agg_grouping_sets", "agg_hll_union_rollup",
-    "agg_percentiles", "agg_pivot", "agg_rollup", "agg_salted_skew",
-    "agg_unpivot", "embedding_centroid_per_label", "event_distinct_sliding",
-    "event_distinct_sliding_hll", "event_interarrival_stats", "join_anti",
-    "join_broadcast_dims", "join_left_outer", "join_right_outer",
-    "join_salted_skew", "join_semi", "pipeline_curriculum_order",
-    "pipeline_graph_triangles", "pipeline_scd2_intervals",
-    "q10_returned_items", "q11_important_value", "q12_shiplag_priority",
-    "q13_customer_distribution", "q14_promo_effect", "q15_top_supplier",
-    "q17_small_quantity_revenue", "q18_large_volume_customer",
-    "q19_disjunctive_predicates", "q2_min_cost_supplier", "q4_order_priority",
-    "q7_volume_shipping", "q8_market_share", "q9_product_profit",
-    "scalar_case_null_handling", "scalar_date_functions",
-    "scalar_json_functions", "scalar_math_functions", "scalar_null_semantics",
-    "scalar_string_functions", "sim_topk_pq", "sink_orc_roundtrip",
-    "sort_topk_global", "sql_adhoc_star_join", "window_lag_lead_rank",
-    "window_running_sum",
-})
+def correctness_rows(root: pathlib.Path) -> dict[int, dict[str, dict]]:
+    """Every ``CORRECTNESS_r{N}.json`` under ``root``, keyed by round."""
+    rounds = {}
+    for path in root.glob("CORRECTNESS_r*.json"):
+        m = _ROUND_FILE.fullmatch(path.name)
+        if m:
+            rounds[int(m.group(1))] = json.loads(path.read_text())
+    return rounds
 
 
-# Checked in round 7 (CORRECTNESS_r07.json: 49 hash-green +
-# dedup_simhash rows-only-by-design, zero failures) — the freshest
-# driver evidence. 43 are the r4-era stale cohort + r5 head rotated
-# back in; the other 7 were round 7's new queries.
-DRIVER_CHECKED_R7 = frozenset({
-    "dedup_embedding_cosine", "dedup_exact_docs", "dedup_exact_events",
-    "dedup_near_minhash", "dedup_ngram_jaccard", "dedup_simhash",
-    "event_ewma_smoothing", "event_path_regex", "event_session_window",
-    "event_sliding_window", "event_time_rollup", "event_tumbling_window",
-    "join_bloom_prefilter", "join_interval_overlap",
-    "multimodal_binary_stats", "multimodal_frame_sample", "multimodal_resize",
-    "pipeline_corpus_dedup", "pipeline_decontaminate",
-    "pipeline_expectations_report", "pipeline_incremental_dedup",
-    "pipeline_mix_languages", "pipeline_pack_sequences",
-    "pipeline_quality_filter", "pipeline_similar_docs_report",
-    "pipeline_stratified_sample", "pipeline_train_val_split",
-    "q16_supplier_part_count", "q20_excess_shipments",
-    "q21_waiting_suppliers", "scalar_array_functions", "sim_recall_report",
-    "sim_topk_cosine", "sim_topk_cosine_arrow", "sim_topk_cosine_int8",
-    "sim_topk_cosine_int8_stored", "sim_topk_cosine_mapside",
-    "sim_topk_pq_stored", "sink_parquet_hive_partitioned",
-    "sink_parquet_schema_evolution", "text_char_entropy", "text_fingerprint",
-    "text_language_id", "text_quality_score", "text_repetition_stats",
-    "text_stats", "text_tfidf_keywords", "text_token_count",
-    "text_token_histogram", "text_winnow_fingerprint",
-})
+def plan_changed(root: pathlib.Path) -> dict[str, int]:
+    """The ``PLAN_CHANGED`` map under ``root`` (empty if absent)."""
+    path = root / PLAN_CHANGED
+    return json.loads(path.read_text()) if path.exists() else {}
 
-# Checked in round 8 (CORRECTNESS_r08.json: 50/50 green on
-# rows+schema+hash) — the freshest driver evidence. 49 are the r5-era
-# stale cohort rotated back in; sim_topk_pq rode at priority 0 via
-# ORACLE_UPGRADED (its r6 row predated the r7 hash oracle).
-DRIVER_CHECKED_R8 = frozenset({
-    "agg_cube", "dedup_containment", "dedup_embedding_lsh",
-    "dedup_span_duplication", "event_funnel_stages", "event_gapfill_locf",
-    "event_retention_cohorts", "event_user_paths", "join_bucketed_colocated",
-    "join_full_outer", "join_range_events", "kafka_dedup_global",
-    "kafka_dedup_lww", "kafka_parse_project", "multimodal_feature_extract",
-    "pipeline_cdc_merge", "pipeline_chunk_sliding", "pipeline_corpus_diff",
-    "pipeline_dataset_card", "pipeline_dedup_keep_best",
-    "pipeline_graph_pagerank", "pipeline_outlier_filter",
-    "pipeline_pii_scrub", "pipeline_quality_buckets",
-    "pipeline_token_budget_select", "pipeline_token_budget_threshold",
-    "pipeline_weighted_sample", "q1_pricing_summary",
-    "q22_global_sales_opportunity", "q3_shipping_priority",
-    "q5_local_supplier_volume", "q6_forecast_revenue",
-    "scalar_date_advanced", "scalar_json_struct_map",
-    "scalar_string_advanced", "scan_partition_pruned", "set_operations",
-    "sim_topk_ivf", "sim_topk_ivf_kmeans", "sim_topk_lsh", "sim_topk_pq",
-    "sink_csv_roundtrip", "sink_jsonl_roundtrip", "text_bigram_surprisal",
-    "text_heavy_hitters", "text_zipf_slope", "window_asof_last_event",
-    "window_distribution_functions", "window_range_frame",
-    "window_topk_per_group",
-})
 
-# Checked in round 9 (CORRECTNESS_r09.json: 47 hash-green + 3
-# rows-only-by-design sketches, zero failures) — the freshest driver
-# evidence. Composition: the 2 new codec queries, the 3 oracle-upgraded
-# re-rides, the 4 pinned LSH/IVF contracts, the lone r5-era spill
-# (event_anomaly_zscore), and 40 of the r6-stale cohort.
-DRIVER_CHECKED_R9 = frozenset({
-    "dedup_simhash", "dedup_embedding_lsh", "sim_topk_lsh",
-    "sim_recall_report", "sim_topk_ivf", "sim_topk_ivf_kmeans",
-    "multimodal_decode_real", "multimodal_decode_wav",
-    "join_bloom_prefilter", "event_anomaly_zscore", "agg_count_distinct",
-    "agg_approx_count_distinct", "agg_rollup", "agg_percentiles",
-    "agg_argmax", "agg_approx_percentiles", "agg_hll_union_rollup",
-    "agg_grouping_sets", "join_broadcast_dims", "join_semi", "join_anti",
-    "join_left_outer", "join_right_outer", "q17_small_quantity_revenue",
-    "q18_large_volume_customer", "q4_order_priority", "q7_volume_shipping",
-    "q10_returned_items", "q12_shiplag_priority", "q14_promo_effect",
-    "q19_disjunctive_predicates", "window_running_sum",
-    "window_lag_lead_rank", "agg_pivot", "agg_unpivot",
-    "scalar_null_semantics", "sort_topk_global", "scalar_string_functions",
-    "scalar_date_functions", "scalar_math_functions",
-    "scalar_json_functions", "scalar_case_null_handling", "agg_salted_skew",
-    "sql_adhoc_star_join", "q2_min_cost_supplier", "q8_market_share",
-    "q9_product_profit", "q11_important_value", "q13_customer_distribution",
-    "q15_top_supplier",
-})
+def _is_evidence(row: dict) -> bool:
+    if any(row.get(k) is False for k in ("rows_match", "schema_match", "hash_match")):
+        return False
+    return row.get("err") in (None, "no_oracle")
 
-# Checked in round 10 (CORRECTNESS_r10.json: 49 hash-green + the
-# rows-only-by-design sliding-HLL sketch, zero failures). Composition:
-# the 3 new r10 queries (stored IVF, IVF-PQ, compacted sink), the
-# oracle-upgraded sim_recall_report re-ride, pinned q11 (second row on
-# its scale-free threshold), the 9-query r6-stale cohort, and 36 of
-# the r7-stale cohort.
-DRIVER_CHECKED_R10 = frozenset({
-    "dedup_embedding_cosine", "dedup_exact_docs", "dedup_exact_events",
-    "dedup_near_minhash", "dedup_ngram_jaccard", "embedding_centroid_per_label",
-    "event_distinct_sliding", "event_distinct_sliding_hll", "event_interarrival_stats",
-    "event_session_window", "event_sliding_window", "event_tumbling_window",
-    "join_salted_skew", "pipeline_corpus_dedup", "pipeline_curriculum_order",
-    "pipeline_decontaminate", "pipeline_graph_triangles", "pipeline_incremental_dedup",
-    "pipeline_mix_languages", "pipeline_pack_sequences", "pipeline_quality_filter",
-    "pipeline_scd2_intervals", "pipeline_similar_docs_report", "pipeline_stratified_sample",
-    "pipeline_train_val_split", "q11_important_value", "q16_supplier_part_count",
-    "q20_excess_shipments", "q21_waiting_suppliers", "scalar_array_functions",
-    "sim_recall_report", "sim_topk_cosine", "sim_topk_cosine_arrow",
-    "sim_topk_cosine_int8", "sim_topk_cosine_int8_stored", "sim_topk_cosine_mapside",
-    "sim_topk_ivf_stored", "sim_topk_ivfpq", "sim_topk_pq_stored",
-    "sink_compacted_roundtrip", "sink_orc_roundtrip", "text_fingerprint",
-    "text_language_id", "text_quality_score", "text_repetition_stats",
-    "text_stats", "text_tfidf_keywords", "text_token_count",
-    "text_token_histogram", "text_winnow_fingerprint",
-})
 
-# Checked in round 11 (CORRECTNESS_r11.json: 50/50 green on
-# rows+schema+hash) — the freshest driver evidence. Composition: the
-# 17 new r11 queries (versioned-table family ×7, BFS, OLS trend, PMI,
-# weighted median, seasonal decompose, transition matrix, PSI,
-# attribution, CUSUM, MMR), and the full 11-query r7-stale leftover
-# cohort + 22 of the r8 cohort's head.
-DRIVER_CHECKED_R11 = frozenset({
-    "agg_cube", "agg_regression_trend", "agg_weighted_median_arrow",
-    "dedup_span_duplication", "event_attribution",
-    "event_changepoint_cusum", "event_ewma_smoothing", "event_path_regex",
-    "event_seasonal_decompose", "event_time_rollup",
-    "event_transition_matrix", "join_full_outer", "join_interval_overlap",
-    "join_range_events", "kafka_dedup_global", "kafka_dedup_lww",
-    "kafka_parse_project", "multimodal_binary_stats",
-    "multimodal_frame_sample", "multimodal_resize", "pipeline_drift_psi",
-    "pipeline_expectations_report", "pipeline_graph_bfs_reach",
-    "q1_pricing_summary", "q22_global_sales_opportunity",
-    "q3_shipping_priority", "q5_local_supplier_volume",
-    "q6_forecast_revenue", "scalar_date_advanced", "scalar_json_struct_map",
-    "scalar_string_advanced", "set_operations", "sim_topk_mmr",
-    "sim_topk_pq", "sink_parquet_hive_partitioned",
-    "sink_parquet_schema_evolution", "sink_versioned_changes",
-    "sink_versioned_compaction", "sink_versioned_incremental_agg",
-    "sink_versioned_pruned_read", "sink_versioned_time_travel",
-    "sink_versioned_upsert", "sink_versioned_zorder_read",
-    "text_char_entropy", "text_collocations_pmi", "text_zipf_slope",
-    "window_asof_last_event", "window_distribution_functions",
-    "window_range_frame", "window_topk_per_group",
-})
+def last_checked(rows_by_round: Mapping[int, Mapping[str, dict]]) -> dict[str, int]:
+    """Each query's newest round with a passing CORRECTNESS row."""
+    last: dict[str, int] = {}
+    for rnd in sorted(rows_by_round):
+        for name, row in rows_by_round[rnd].items():
+            if _is_evidence(row):
+                last[name] = rnd
+    return last
 
-# Checked in round 12 (CORRECTNESS_r12.json: 47 hash-green + 3
-# rows-only-by-design sketches, zero failures) — the freshest driver
-# evidence. Composition: the 2 new r12 queries (PNG codec, schema
-# widen), and the full 24-query r8-stale leftover cohort + 24 of the
-# r9 cohort's head.
-DRIVER_CHECKED_R12 = frozenset({
-    "agg_approx_count_distinct", "agg_approx_percentiles", "agg_argmax",
-    "agg_count_distinct", "agg_grouping_sets", "agg_hll_union_rollup",
-    "agg_percentiles", "agg_pivot", "agg_rollup", "dedup_containment",
-    "event_funnel_stages", "event_gapfill_locf", "event_retention_cohorts",
-    "event_user_paths", "join_anti", "join_broadcast_dims",
-    "join_bucketed_colocated", "join_left_outer", "join_right_outer",
-    "join_semi", "multimodal_decode_png", "multimodal_feature_extract",
-    "pipeline_cdc_merge", "pipeline_chunk_sliding", "pipeline_corpus_diff",
-    "pipeline_dataset_card", "pipeline_dedup_keep_best",
-    "pipeline_graph_pagerank", "pipeline_outlier_filter",
-    "pipeline_pii_scrub", "pipeline_quality_buckets",
-    "pipeline_token_budget_select", "pipeline_token_budget_threshold",
-    "pipeline_weighted_sample", "q10_returned_items", "q12_shiplag_priority",
-    "q14_promo_effect", "q17_small_quantity_revenue",
-    "q18_large_volume_customer", "q19_disjunctive_predicates",
-    "q4_order_priority", "q7_volume_shipping", "scan_partition_pruned",
-    "sink_csv_roundtrip", "sink_jsonl_roundtrip",
-    "sink_versioned_schema_widen", "text_bigram_surprisal",
-    "text_heavy_hitters", "window_lag_lead_rank", "window_running_sum",
-})
 
-# Checked in round 13 (CORRECTNESS_r13.json: 50/50 green on
-# rows+schema+hash) — the freshest driver evidence. Composition: the
-# 8 new r13 queries (GIF codec, MoR family ×5, BPE ×2... see QUERIES.md),
-# the 3 plan-changed re-rides, the 24-query r9-stale leftover cohort,
-# and the r10 cohort's text head.
-DRIVER_CHECKED_R13 = frozenset({
-    "agg_salted_skew", "agg_unpivot", "dedup_embedding_lsh",
-    "dedup_exact_docs", "dedup_exact_events", "dedup_near_minhash",
-    "dedup_ngram_jaccard", "dedup_simhash", "event_anomaly_zscore",
-    "join_bloom_prefilter", "multimodal_decode_gif",
-    "multimodal_decode_real", "multimodal_decode_wav",
-    "q11_important_value", "q13_customer_distribution", "q15_top_supplier",
-    "q16_supplier_part_count", "q20_excess_shipments",
-    "q21_waiting_suppliers", "q2_min_cost_supplier", "q8_market_share",
-    "q9_product_profit", "scalar_case_null_handling",
-    "scalar_date_functions", "scalar_json_functions",
-    "scalar_math_functions", "scalar_null_semantics",
-    "scalar_string_functions", "sim_topk_ivf", "sim_topk_ivf_kmeans",
-    "sim_topk_lsh", "sim_topk_mmr", "sink_versioned_changes",
-    "sink_versioned_checkpoint_read", "sink_versioned_clone_read",
-    "sink_versioned_delete_vectors", "sink_versioned_incremental_agg",
-    "sink_versioned_partitioned_read", "sink_versioned_upsert_mor",
-    "sort_topk_global", "sql_adhoc_star_join", "text_bpe_lang_tokens",
-    "text_bpe_token_stats", "text_fingerprint", "text_language_id",
-    "text_quality_score", "text_stats", "text_tfidf_keywords",
-    "text_token_count", "text_token_histogram",
-})
+def window_order(
+    names: Iterable[str],
+    rows_by_round: Mapping[int, Mapping[str, dict]],
+    changed: Mapping[str, int],
+) -> list[str]:
+    """``names`` in check-window order (see the module docstring)."""
+    last = last_checked(rows_by_round)
 
-# Checked in round 14 (CORRECTNESS_r14.json: 50/50 green on
-# rows+schema+hash) — the freshest driver evidence. Composition: the 5
-# new r14 queries (equality deletes, hive export, bloom point read,
-# span dedup, Avro sink), the 16-member r14 optimization plan-changed
-# set, and all but the twin-pair tail of the r10-stale cohort.
-DRIVER_CHECKED_R14 = frozenset({
-    "agg_weighted_median_arrow", "dedup_containment",
-    "dedup_embedding_cosine", "dedup_near_minhash", "dedup_ngram_jaccard",
-    "dedup_simhash", "dedup_span_duplication", "embedding_centroid_per_label",
-    "event_interarrival_stats", "event_session_window",
-    "event_sliding_window", "event_tumbling_window",
-    "join_bucketed_colocated", "join_range_events", "join_salted_skew",
-    "pipeline_corpus_dedup", "pipeline_curriculum_order",
-    "pipeline_decontaminate", "pipeline_graph_triangles",
-    "pipeline_incremental_dedup", "pipeline_mix_languages",
-    "pipeline_pack_sequences", "pipeline_quality_buckets",
-    "pipeline_quality_filter", "pipeline_scd2_intervals",
-    "pipeline_similar_docs_report", "pipeline_span_dedup",
-    "pipeline_stratified_sample", "pipeline_train_val_split",
-    "q16_supplier_part_count", "scalar_array_functions", "sim_recall_report",
-    "sim_topk_cosine", "sim_topk_cosine_arrow", "sim_topk_cosine_int8",
-    "sim_topk_cosine_int8_stored", "sim_topk_cosine_mapside",
-    "sim_topk_ivf_stored", "sim_topk_ivfpq", "sim_topk_pq_stored",
-    "sink_avro_roundtrip", "sink_compacted_roundtrip", "sink_orc_roundtrip",
-    "sink_versioned_delete_equality", "sink_versioned_export_hive",
-    "sink_versioned_point_read_bloom", "text_bigram_surprisal",
-    "text_repetition_stats", "text_tfidf_keywords", "text_winnow_fingerprint",
-})
+    def staleness(name: str) -> int:
+        rnd = last.get(name, 0)
+        return 0 if rnd <= changed.get(name, 0) else rnd
 
-# Queries whose ORACLE or PLAN changed AFTER their most recent driver
-# row: the banked evidence predates the contract (or physical plan) it
-# would vouch for, so the rotation treats them as never-checked until a
-# fresh driver row lands. Membership is keyed off
-# tools/plan_fingerprints.json diffs as well as oracle edits (r12
-# ADVICE): a code change that alters a query's physical plan makes its
-# old driver row vouch for a plan that no longer runs. The r14 members
-# all landed fresh r14 rows, so the set reset at the start of round 15;
-# entries below are the round-15 OPTIMIZATION plan changes — the exact
-# fingerprint diff vs the tree the r14 driver graded (f341712) — PLUS
-# the two graph hosts whose banked rows (pagerank r12, bfs r11) predate
-# the r14 candidate-pipeline rewrite their checkpointed plans consume:
-# tools/plan_fingerprints.py used to hash only the post-localCheckpoint
-# plan (Scan ExistingRDD), which truncated that lineage (ADVICE r14
-# medium); the tool now hashes the full pre-checkpoint pipeline (see
-# its --help), and these rows ride priority 0 to earn fresh evidence.
-PLAN_OR_ORACLE_CHANGED_SINCE_LAST_CHECK = frozenset({
-    "dedup_containment",
-    "event_interarrival_stats",
-    "pipeline_corpus_dedup",
-    "pipeline_curriculum_order",
-    "pipeline_dedup_keep_best",
-    "pipeline_graph_bfs_reach",
-    "pipeline_graph_pagerank",
-    "pipeline_span_dedup",
-})
+    # sorted() is stable: ties keep module registration order
+    return sorted(names, key=staleness)
 
 
 def merged_registry() -> tuple[dict[str, QueryFn], dict[str, str]]:
@@ -408,43 +124,5 @@ def merged_registry() -> tuple[dict[str, QueryFn], dict[str, str]]:
     if unknown:
         raise ValueError(f"oracles without queries: {unknown}")
 
-    def _window_priority(name: str) -> int:
-        # Pure staleness rotation (round 6 on): sort by the round of
-        # each query's most recent driver CORRECTNESS row, oldest
-        # first; never-checked (newly added) queries lead, as do
-        # queries whose oracle was upgraded after their last check.
-        # The r14 window (first 50) is therefore: any new queries, then
-        # the 35-query r10-stale cohort (VERDICT r13 item 1), then the
-        # r11 cohort's head in module order.
-        if name in PLAN_OR_ORACLE_CHANGED_SINCE_LAST_CHECK:
-            return 0
-        if name in DRIVER_CHECKED_R14:
-            return 12
-        if name in DRIVER_CHECKED_R13:
-            return 11
-        if name in DRIVER_CHECKED_R12:
-            return 10
-        if name in DRIVER_CHECKED_R11:
-            return 9
-        if name in DRIVER_CHECKED_R10:
-            return 8
-        if name in DRIVER_CHECKED_R9:
-            return 7
-        if name in DRIVER_CHECKED_R8:
-            return 6
-        if name in DRIVER_CHECKED_R7:
-            return 5
-        if name in DRIVER_CHECKED_R6:
-            return 4
-        if name in DRIVER_CHECKED_R5:
-            return 3
-        if name in DRIVER_CHECKED_R4:
-            return 2
-        if name in DRIVER_CHECKED_R2_R3:
-            return 1
-        return 0
-
-    # sorted() is stable: within each priority group the module
-    # registration order (and thus QUERIES.md's grouping) is preserved.
-    ordered = sorted(queries, key=_window_priority)
+    ordered = window_order(queries, correctness_rows(_REPO), plan_changed(_REPO))
     return {n: queries[n] for n in ordered}, oracles

@@ -1,9 +1,9 @@
 """Unit tests for the preflight tooling itself: the plan-fingerprint
 gate's ERROR handling (ADVICE r7-medium — a query that cannot construct
 must never pass, and --write must refuse to bake the failure into the
-snapshot) and bench_compare's host-rate normalization (uniform
-boot-to-boot inflation is not a regression; idiosyncratic and broad
-regressions still are)."""
+snapshot), its --write upkeep of tools/plan_changed.json, and
+bench_compare's host-rate normalization (uniform boot-to-boot inflation
+is not a regression; idiosyncratic and broad regressions still are)."""
 
 from __future__ import annotations
 
@@ -28,11 +28,14 @@ def _load(modname: str):
 
 @pytest.fixture()
 def pf(monkeypatch, tmp_path):
-    """plan_fingerprints with session + fingerprint pass stubbed out and
-    the snapshot redirected to a temp file."""
+    """plan_fingerprints with session + fingerprint pass stubbed out, the
+    snapshot redirected to a temp file and the repo root (CORRECTNESS
+    files, tools/plan_changed.json) to a temp dir."""
     mod = _load("plan_fingerprints")
     monkeypatch.setattr(mod, "_open_session", lambda: None)
     monkeypatch.setattr(mod, "SNAPSHOT", tmp_path / "snap.json")
+    monkeypatch.setattr(mod, "_REPO", tmp_path)
+    (tmp_path / "tools").mkdir()
     return mod
 
 
@@ -64,6 +67,29 @@ def test_fingerprint_check_green_path_and_mismatch(pf, monkeypatch, capsys):
     assert _run(pf, monkeypatch, [], {"q": "aaa", "r": "bbb"}) == 0
     assert _run(pf, monkeypatch, [], {"q": "aaa", "r": "ccc"}) == 1
     assert "CHANGED r" in capsys.readouterr().out
+
+
+def test_plan_changed_update_stamps_moved_and_drops_expired(pf):
+    old = {"kept": "a", "expired": "b", "same": "c", "moved": "d", "gone": "g"}
+    new = {"kept": "a", "expired": "b", "same": "c", "moved": "D", "added": "e"}
+    changed = {"kept": 15, "expired": 14, "gone": 15}
+    last = {"kept": 15, "expired": 15, "same": 15, "moved": 15, "gone": 15}
+    assert pf.update_plan_changed(changed, old, new, last, 15) == {
+        "added": 15, "kept": 15, "moved": 15,
+    }
+
+
+def test_fingerprint_write_maintains_plan_changed(pf, monkeypatch):
+    ok = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
+    (pf._REPO / "CORRECTNESS_r15.json").write_text(json.dumps({"p": ok, "q": ok}))
+    (pf._REPO / "CORRECTNESS_r16.json").write_text(json.dumps({"p": ok}))
+    plan_changed = pf._REPO / "tools" / "plan_changed.json"
+    plan_changed.write_text(json.dumps({"p": 15, "q": 15}))
+    pf.SNAPSHOT.write_text(json.dumps({"p": "aaa", "q": "bbb", "r": "ccc"}))
+    # p expired (checked in r16 after its r15 stamp), q still pending,
+    # r's plan moved: stamped with the newest round on disk
+    assert _run(pf, monkeypatch, ["--write"], {"p": "aaa", "q": "bbb", "r": "CCC"}) == 0
+    assert json.loads(plan_changed.read_text()) == {"q": 15, "r": 16}
 
 
 def test_fingerprint_normalize_strips_session_counters(pf):

@@ -4,6 +4,12 @@ and diff against the committed snapshot.
     python tools/plan_fingerprints.py            # check vs committed file
     python tools/plan_fingerprints.py --write    # regenerate the snapshot
 
+``--write`` also maintains ``tools/plan_changed.json``, the check
+window's priority-0 map (see the ``plans`` package docstring): every
+query whose fingerprint moved or is new is stamped with the newest
+``CORRECTNESS_r{N}.json`` round on disk, and entries whose query a
+later round has checked are dropped. Commit both files.
+
 Bench TOTALS on this host move ~1.3x between VM boots with zero source
 change (memory: bench-noise-host-variance), so "is this a regression or
 noise?" used to need manual git archaeology over the query's plan code
@@ -157,6 +163,34 @@ def _fingerprint_pass(spark, sf_dir: str, names=None) -> dict[str, str]:
     return prints
 
 
+def update_plan_changed(
+    changed: dict[str, int],
+    old: dict[str, str],
+    new: dict[str, str],
+    last: dict[str, int],
+    newest: int,
+) -> dict[str, int]:
+    """The plan-changed map after a ``--write`` that replaced snapshot
+    ``old`` by ``new``: drop entries for unregistered queries and for
+    queries checked after their stamp (``last``: newest passing
+    CORRECTNESS round per query), then stamp every moved or new
+    fingerprint with round ``newest``."""
+    kept = {n: r for n, r in changed.items() if n in new and last.get(n, 0) <= r}
+    kept.update({n: newest for n, fp in new.items() if old.get(n) != fp})
+    return kept
+
+
+def _write_plan_changed(old: dict[str, str], new: dict[str, str]) -> None:
+    from new_kafka_consumer_to_hadoop_hdfs_spark import plans
+
+    rounds = plans.correctness_rows(_REPO)
+    changed = update_plan_changed(plans.plan_changed(_REPO), old, new,
+                                  plans.last_checked(rounds), max(rounds, default=0))
+    path = _REPO / plans.PLAN_CHANGED
+    path.write_text(json.dumps(changed, indent=1, sort_keys=True) + "\n")
+    print(f"fingerprints: {len(changed)} plan-changed entries in {path}")
+
+
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--write", action="store_true",
@@ -197,8 +231,10 @@ def main() -> int:
             print("fingerprints: REFUSING to write — these queries failed "
                   f"to construct: {', '.join(broken)}")
             return 1
+        old = json.loads(SNAPSHOT.read_text()) if SNAPSHOT.exists() else {}
         SNAPSHOT.write_text(json.dumps(now, indent=1, sort_keys=True) + "\n")
         print(f"fingerprints: wrote {len(now)} to {SNAPSHOT}")
+        _write_plan_changed(old, now)
         return 0
 
     if not SNAPSHOT.exists():
@@ -229,7 +265,8 @@ def main() -> int:
         print(
             f"fingerprints: {len(changed)} changed / {len(added)} new / "
             f"{len(removed)} removed — if intentional, rerun with --write "
-            "and commit the snapshot; if not, the plan regressed."
+            "and commit the snapshot and tools/plan_changed.json; if not, "
+            "the plan regressed."
         )
         return 1
     print(f"fingerprints: all {len(now)} plans match the snapshot")

@@ -8,7 +8,8 @@ signal:
 
 1. **Correctness sweep** — `tools/verify_all.py`: every registered
    query vs its DuckDB oracle at sf0.01 under a hostile session.
-2. **pytest** — `python -m pytest tests/ -x -q`.
+2. **pytest** — `python -m pytest tests/ perfbench/tests -x -q` (both
+   suites build on `merged_registry()`).
 3. **Plan fingerprints** — `tools/plan_fingerprints.py`: each
    registered query's normalized physical-plan hash vs the committed
    `tools/plan_fingerprints.json`; an unexplained plan change fails
@@ -61,7 +62,8 @@ def main() -> int:
     py = sys.executable
     if _run("sweep", [py, "tools/verify_all.py", "--sf-dir", args.sf_dir]):
         return 1
-    if _run("pytest", [py, "-m", "pytest", "tests/", "-x", "-q"]):
+    if _run("pytest", [py, "-m", "pytest", "tests/", "perfbench/tests",
+                       "-x", "-q"]):
         return 1
     # The fingerprint snapshot is pinned to the default sf0.01 recipe —
     # plan shape legitimately varies with data size (join strategy
@@ -81,7 +83,8 @@ def main() -> int:
             print("preflight: plan fingerprints failed — if the tool "
                   "reported CHANGED/NEW/REMOVED entries and the change is "
                   "intentional, run `python tools/plan_fingerprints.py "
-                  "--write` and commit tools/plan_fingerprints.json; a "
+                  "--write` and commit tools/plan_fingerprints.json and "
+                  "tools/plan_changed.json; a "
                   "missing snapshot or a BROKEN (unconstructable) query is "
                   "reported verbatim above.")
         return 1
