@@ -69,8 +69,11 @@ def run_streaming(
     key's messages land in one batch — always true for AvailableNow
     over a quiet topic). ``stateful=True`` switches to the
     cross-batch-exact LWW operator (streaming/dedup.stateful_lww_dedup,
-    applyInPandasWithState), emitting a key's new winner whenever a
-    higher offset arrives, with O(live keys) state.
+    a built-in update-mode ``max(struct)`` aggregate), emitting a key's
+    new winner whenever a higher offset arrives, with O(live keys)
+    state. A checkpoint written by the earlier ``applyInPandasWithState``
+    form of that operator is refused at start; restart such a stream
+    from a fresh checkpoint.
 
     --limit in streaming mode: ``maxOffsetsPerTrigger`` throttles each
     micro-batch, and the foreachBatch path additionally enforces the

@@ -8,7 +8,7 @@ registered with cloudpickle's by-value pickling — otherwise the
 executor tries ``import <module>`` and dies with ModuleNotFoundError.
 
 One implementation instead of a copy per call site
-(streaming/dedup.py, streaming/cdc.py, operators/multimodal.py).
+(streaming/smoothing.py, operators/multimodal.py).
 """
 
 from __future__ import annotations

@@ -9,124 +9,55 @@ rows so a downstream sink can propagate the deletion.
 
 This extends :func:`streaming.dedup.stateful_lww_dedup` (the
 reference's argmax semantics, HadoopKafkaConsumer.java:69-78) with
-delete markers — the missing half of MERGE semantics. The subtle
-point is tombstone retention: state for a deleted key is NOT removed
-on delete, because a late-arriving upsert that is OLDER than the
-delete must stay suppressed (dropping the tombstone would resurrect
-the key). Real systems GC tombstones once the event-time watermark
-passes the delete's timestamp; here the retention is unbounded and
-documented — at 100 TB/day wire ``GroupStateTimeout`` eviction or the
-RocksDB provider (``rocksdb_state_conf``) accordingly.
+delete markers — the missing half of MERGE semantics — through the
+same built-in update-mode argmax: ``max(struct(ts_us, seq, stamp,
+is_delete, value))`` per key, the streaming form of the batch twin's
+``operators/dedup.cdc_compact``. The subtle point is tombstone
+retention: state for a deleted key is NOT removed on delete, because a
+late-arriving upsert that is OLDER than the delete must stay
+suppressed (dropping the tombstone would resurrect the key). Real
+systems GC tombstones once the event-time watermark passes the
+delete's timestamp; here the retention is unbounded and documented —
+at 100 TB/day use the RocksDB provider (``rocksdb_state_conf``) or add
+a watermark-bounded eviction.
 
-State per key is one (ts, seq, op, value) tuple — O(|live keys| +
-|tombstoned keys|), independent of stream length.
+State per key is one (ts_us, seq, stamp, is_delete, value) struct —
+O(|live keys| + |tombstoned keys|), independent of stream length.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..shipping import ship_module_by_value
-from pyspark.sql.types import (
-    BooleanType,
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from .dedup import _stamped_argmax
 
 # input contract: key long, ts_us long (epoch micros), seq long,
 # op string ('U' upsert / 'D' delete), value double
 CDC_INPUT_SCHEMA = "key long, ts_us long, seq long, op string, value double"
 
-_CDC_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("key", LongType()),
-        StructField("ts_us", LongType()),
-        StructField("seq", LongType()),
-        StructField("value", DoubleType()),
-        StructField("is_tombstone", BooleanType()),
-    ]
-)
-
-_CDC_STATE_SCHEMA = StructType(
-    [
-        StructField("ts_us", LongType()),
-        StructField("seq", LongType()),
-        StructField("op", StringType()),
-        StructField("value", DoubleType()),
-    ]
-)
-
-
-def _cdc_update(
-    key,
-    batches: Iterable[pd.DataFrame],
-    state: GroupState,
-) -> Iterable[pd.DataFrame]:
-    """Per-key fold: winner = max by (ts_us, seq); emit on change.
-
-    (ts_us, seq) is required to be a total order per key (seq is the
-    changelog offset / event id), so the fold is deterministic
-    regardless of batch row order.
-    """
-    if state.exists:
-        best = tuple(state.get)
-    else:
-        best = None
-    changed = False
-    for pdf in batches:
-        for ts_us, seq, op, value in zip(
-            pdf["ts_us"], pdf["seq"], pdf["op"], pdf["value"]
-        ):
-            cand = (int(ts_us), int(seq))
-            if best is None or cand > (best[0], best[1]):
-                # NULL upsert values stay NULL (pandas delivers NaN) —
-                # the batch twin's struct-max preserves NULL, and
-                # NaN-vs-NULL diverge under Spark semantics downstream
-                val = None if value is None or value != value else float(value)
-                best = (cand[0], cand[1], str(op), val)
-                changed = True
-    if changed:
-        state.update(best)
-        yield pd.DataFrame(
-            {
-                "key": [key[0]],
-                "ts_us": [best[0]],
-                "seq": [best[1]],
-                "value": [None if best[2] == "D" else best[3]],
-                "is_tombstone": [best[2] == "D"],
-            }
-        )
-
 
 def stateful_cdc_merge(changes: DataFrame) -> DataFrame:
     """Exact streaming MERGE over a (key, ts_us, seq, op, value)
-    changelog. Output (update mode): one row per key per micro-batch
-    in which its latest-change winner moved — ``is_tombstone=True``
-    rows carry a null value and mean "delete key downstream".
+    changelog. Output (update mode, columns ``key long, ts_us long,
+    seq long, value double, is_tombstone boolean``): one row per key
+    per micro-batch in which its latest-change winner moved —
+    ``is_tombstone=True`` rows carry a null value and mean "delete key
+    downstream".
 
-    Plan shape: one hash shuffle on key into the stateful operator;
-    Arrow batches to Python (the documented last-resort path — custom
-    delete-marker semantics are not expressible with built-in
-    streaming dedup, which only keeps-first).
+    Plan shape: a partial ``max(struct(ts_us, seq, stamp, is_delete,
+    value))`` per key, one hash shuffle on key, then the stateful
+    aggregate (streaming/dedup._stamped_argmax). (ts_us, seq) must be a
+    total order per key, so the winner does not depend on batch row
+    order.
 
     Malformed changelog rows (NULL ts_us/seq/op — no position in the
     total order, or no op) are DROPPED before the stateful operator,
     mirroring the reference's drop-corrupt parse convention
     (HadoopKafkaConsumer.java:64-67): a null ordering key would
-    otherwise crash the per-key fold mid-stream.
+    otherwise take part in the argmax.
     """
-    ship_module_by_value(__name__)
-
-    grouped = changes.filter(
+    typed = changes.filter(
         F.col("ts_us").isNotNull()
         & F.col("seq").isNotNull()
         & F.col("op").isNotNull()
@@ -134,15 +65,16 @@ def stateful_cdc_merge(changes: DataFrame) -> DataFrame:
         F.col("key").cast("long"),
         F.col("ts_us").cast("long"),
         F.col("seq").cast("long"),
-        F.col("op").cast("string"),
+        (F.col("op").cast("string") == "D").alias("is_delete"),
         F.col("value").cast("double"),
-    ).groupBy("key")
-    return grouped.applyInPandasWithState(
-        _cdc_update,
-        outputStructType=_CDC_OUTPUT_SCHEMA,
-        stateStructType=_CDC_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+    best = _stamped_argmax(typed, ["key"], ["ts_us", "seq"], ["is_delete", "value"])
+    return best.select(
+        "key",
+        "ts_us",
+        "seq",
+        F.when(~F.col("is_delete"), F.col("value")).alias("value"),
+        F.col("is_delete").alias("is_tombstone"),
     )
 
 

@@ -14,13 +14,14 @@ split into two operators with different guarantees:
 2. :func:`stateful_lww_dedup` — exact cross-micro-batch
    last-write-wins (argmax by an ordering column, strict '>', ties
    keep first — the reference's precise semantics,
-   HadoopKafkaConsumer.java:69-78) via ``applyInPandasWithState``.
-   Each key's state holds the current winner; every micro-batch emits
-   the keys whose winner changed (update semantics). This is the
-   documented Pandas-UDF last-resort path (SURVEY.md §2.5): the
-   argmax-with-override semantics over unbounded input isn't
-   expressible with built-in streaming operators, which only offer
-   keep-first dedup.
+   HadoopKafkaConsumer.java:69-78). It is Structured Streaming's
+   incremental update-mode aggregation (Armbrust et al., SIGMOD 2018):
+   a ``max(struct(...))`` argmax per key whose struct carries a
+   negated batch stamp after the ordering columns, so the incumbent
+   wins ties and each micro-batch emits only the keys whose winner
+   changed (:func:`_stamped_argmax`). Built-in operators end to end:
+   the partial aggregate collapses versions map-side and no Python
+   worker runs.
 
 Scale notes: state lives in the state store, partitioned by key hash
 across executors. For large key spaces configure the RocksDB provider
@@ -33,21 +34,10 @@ same cliff the reference's HashMap had, which is why
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Sequence
-
-import pandas as pd
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
-
-from ..shipping import ship_module_by_value
 
 
 def rocksdb_state_conf() -> dict[str, str]:
@@ -81,84 +71,71 @@ def dedup_within_watermark(
     )
 
 
-# Output/state schemas for stateful_lww_dedup: the reference envelope
-# (partition, id) key → winning (offset, msg).
-_LWW_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("partition", LongType()),
-        StructField("id", LongType()),
-        StructField("offset", LongType()),
-        StructField("msg", StringType()),
-    ]
-)
-_LWW_STATE_SCHEMA = StructType(
-    [StructField("offset", LongType()), StructField("msg", StringType())]
-)
+def _stamped_argmax(
+    df: DataFrame,
+    keys: Sequence[str],
+    order_cols: Sequence[str],
+    payload_cols: Sequence[str],
+) -> DataFrame:
+    """Exact streaming argmax per key, emitting only changed winners.
 
+    Three steps, all built-in operators:
 
-def _lww_update(
-    key: tuple,
-    batches: Iterable[pd.DataFrame],
-    state: GroupState,
-) -> Iterable[pd.DataFrame]:
-    """Per-key state update: argmax by offset with strict '>' override.
+    1. project a batch stamp ``-unix_micros(current_timestamp())`` —
+       projected, not computed inside the aggregate, which refuses a
+       non-deterministic expression. Spark fixes ``current_timestamp``
+       per micro-batch and replays it from the offset log on restart,
+       so a replayed batch carries its original stamp;
+    2. ``max(struct(*order_cols, stamp, *payload_cols))`` per key in
+       update mode — the state holds one struct per key and the
+       partial aggregate below the exchange collapses versions
+       map-side;
+    3. keep the keys whose winning stamp is the current batch's: a key
+       touched by the batch whose incumbent still wins is dropped.
 
-    Within a batch rows are reduced in (offset, row-order) — the
-    incumbent survives ties, mirroring HadoopKafkaConsumer.java:69-78.
-    Emits one row per key per batch IFF the winner changed.
+    The stamp is negated, so on equal ordering columns the OLDER batch
+    wins — the incumbent survives ties, as a strict '>' override does,
+    and a record re-delivered unchanged is not emitted again. This
+    assumes batch timestamps rise from one micro-batch to the next; if
+    the wall clock steps back, the worst case is an identical row
+    emitted again, which the per-epoch overwrite sinks absorb. Within
+    one batch, ties on the ordering columns go to the larger payload
+    (the ordering columns must be a total order per key).
+
+    Output: ``(*keys, *order_cols, *payload_cols)``.
     """
-    if state.exists:
-        best_offset, best_msg = state.get
-    else:
-        best_offset, best_msg = None, None
-    changed = False
-    for pdf in batches:
-        for offset, msg in zip(pdf["offset"], pdf["msg"]):
-            offset = int(offset)
-            if best_offset is None or offset > best_offset:  # strict >
-                best_offset, best_msg = offset, msg
-                changed = True
-    if changed:
-        state.update((best_offset, best_msg))
-        yield pd.DataFrame(
-            {
-                "partition": [key[0]],
-                "id": [key[1]],
-                "offset": [best_offset],
-                "msg": [best_msg],
-            }
-        )
+    stamp = -F.unix_micros(F.current_timestamp())
+    best = (
+        df.select(*keys, *order_cols, stamp.alias("__stamp"), *payload_cols)
+        .groupBy(*keys)
+        .agg(F.max(F.struct(*order_cols, "__stamp", *payload_cols)).alias("__best"))
+    )
+    return best.filter(F.col("__best.__stamp") == stamp).select(
+        *keys, *(F.col(f"__best.{c}").alias(c) for c in [*order_cols, *payload_cols])
+    )
 
 
 def stateful_lww_dedup(parsed: DataFrame) -> DataFrame:
     """Exact streaming last-write-wins over (partition, id).
 
     Input: a streaming DataFrame with (partition, id, offset, msg) —
-    the parsed reference envelope. Output (update mode): the new winner
-    for every key whose argmax-by-offset changed in the micro-batch.
+    the parsed reference envelope. Output (update mode, columns
+    ``partition long, id long, offset long, msg string``): the new
+    winner for every key whose argmax-by-offset changed in the
+    micro-batch.
 
-    Plan shape: one hash shuffle on the grouping key into the stateful
-    operator; state per key is a single (offset, msg) pair, so state
-    size is O(|live keys|), independent of stream length. Arrow moves
-    batches to Python — the documented exception to the no-Python rule,
-    required for custom stateful logic until Spark exposes built-in
-    argmax dedup.
+    Plan shape: a partial ``max(struct(offset, stamp, msg))`` per key,
+    one hash shuffle on the key, then the stateful aggregate; state per
+    key is a single struct, so state size is O(|live keys|),
+    independent of stream length.
     """
-    ship_module_by_value(__name__)
-
-    grouped = parsed.select(
+    typed = parsed.select(
         F.col("partition").cast("long"),
         F.col("id").cast("long"),
         F.col("offset").cast("long"),
         F.col("msg").cast("string"),
-    ).groupBy("partition", "id")
-    return grouped.applyInPandasWithState(
-        _lww_update,
-        outputStructType=_LWW_OUTPUT_SCHEMA,
-        stateStructType=_LWW_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
     )
+    return _stamped_argmax(typed, ["partition", "id"], ["offset"], ["msg"])
 
 
 def per_partition_cap(limit: int, *, state_path: str | None = None):

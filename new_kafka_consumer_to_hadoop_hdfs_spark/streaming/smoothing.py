@@ -4,9 +4,10 @@
 The batch query folds each user's FULL history per run; a monitoring
 pipeline wants the smoothed value maintained INCREMENTALLY as events
 arrive — per-key state is exactly one (ewma, n) pair, the textbook
-``applyInPandasWithState`` shape (same family as
-`streaming/dedup.stateful_lww_dedup`, whose state is one
-(offset, msg) pair).
+``applyInPandasWithState`` shape. Unlike the argmax behind
+`streaming/dedup.stateful_lww_dedup`, which runs as a built-in
+update-mode aggregate, the EWMA recursion depends on arrival order, so
+it stays a per-key Python fold.
 
 Correctness contract: EWMA is order-sensitive, so the stream equals
 the batch fold only when each user's events ARRIVE in (ts, event_id)
