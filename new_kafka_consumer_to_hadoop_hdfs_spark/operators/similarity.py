@@ -34,6 +34,11 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+# Row cap of every broadcast-query collect (:func:`_collect_queries`):
+# the query matrix ships inside every task closure, so it must stay
+# broadcast-sized — ~100 MB at 64-dim float64.
+_MAX_QUERY_ROWS = 200_000
+
 
 def to_double(vec: Column) -> Column:
     """Cast array<float> → array<double> before arithmetic so both the
@@ -154,6 +159,140 @@ def _bucket_ids_udf(dim: int, G, w: float):
     return bucket_ids
 
 
+def _empty_topk(spark, id_type: str = "long") -> DataFrame:
+    """The top-k output contract with no rows."""
+    return spark.createDataFrame(
+        [], f"query_id {id_type}, neighbor_id {id_type}, cos_sim double, rank int"
+    )
+
+
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """The rank tail of every top-k operator here: per-query
+    ``row_number`` under the total order (cos DESC, neighbor_id ASC),
+    rank ≤ k kept, ``__cos`` rounded to 6 decimals as ``cos_sim``."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("__cos").desc(), F.col("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.round(F.col("__cos"), 6).alias("cos_sim"),
+            "rank",
+        )
+    )
+
+
+def _collect_queries(queries: DataFrame, id_col: str, vec_col: str, op: str,
+                     max_rows: int, dim: int | None = None):
+    """The query side of the broadcast-query operators, collected once
+    as ``(q_ids int64[n], Q float64[n, dim])``: non-null vectors of
+    width ``dim`` (default: the first collected vector's width).
+
+    GUARDRAIL (r15, same contract style as ``bloom_prefilter``'s
+    ``max_bits`` and :func:`cosine_pairs`' ``max_rows``): the collect
+    is issued through ``limit(max_rows + 1)``, so an over-cap query
+    relation short-circuits the scan and raises instead of OOMing the
+    driver and every task that deserializes the query matrix."""
+    import numpy as np
+
+    rows = (
+        queries.select(F.col(id_col), to_double(F.col(vec_col)))
+        .filter(F.col(vec_col).isNotNull())
+        .limit(max_rows + 1)
+        .collect()
+    )
+    if len(rows) > max_rows:
+        raise ValueError(
+            f"{op}: query relation exceeds max_query_rows={max_rows} — the "
+            f"query matrix ships inside every task closure, so it must stay "
+            f"broadcast-sized. Use the window-rank plans (topk_cosine / "
+            f"topk_cosine_arrow / lsh_topk_cosine) for large query sets, or "
+            f"score the queries in batches of at most {max_rows} rows."
+        )
+    if dim is None and rows:
+        dim = len(rows[0][1])
+    rows = [r for r in rows if len(r[1]) == dim]
+    q_ids = np.array([r[0] for r in rows], dtype=np.int64)
+    Q = np.array([list(r[1]) for r in rows], dtype=np.float64)
+    return q_ids, Q.reshape(len(rows), dim or 0)
+
+
+def _mapside_topk(stream: DataFrame, q_ids, k: int, score_batch,
+                  id_type: str = "long") -> DataFrame:
+    """The map-side top-k kernel of the broadcast-query operators.
+
+    ``score_batch(pdf)`` maps one Arrow batch of ``stream`` to
+    ``(neighbor_ids int64[n], scores float64[n, |queries|])``, with
+    every score the operator disqualifies already at -inf, or None when
+    the batch holds no scoreable row. Each input partition keeps only
+    its own top-k per query (one ``mapInPandas`` pass, a bounded
+    per-query pool across batches), so the exchange carries at most
+    k·|queries|·partitions candidate rows and the global window rank
+    (:func:`_rank_topk`) runs on that tiny relation. Top-k of
+    per-partition top-ks equals the global top-k because the
+    (cos DESC, neighbor_id ASC) order is total.
+
+    The generator is, and every scorer must be, a closure that
+    references no package-module name, so both pickle by value to
+    workers launched from any cwd (see ``shipping.py``).
+    """
+
+    def prune(batches):
+        import numpy as np  # noqa: PLC0415 — worker-side import
+        import pandas as pd  # noqa: PLC0415
+
+        # per-query bounded candidate pools, maintained across every
+        # Arrow batch of THIS partition
+        best: dict[int, list[tuple[float, int]]] = {int(qid): [] for qid in q_ids}
+        for pdf in batches:
+            scored = score_batch(pdf)
+            if scored is None:
+                continue
+            nids, scores = scored
+            # disqualify self-pairs and NaN scores, then select per-query
+            # top-k IN NUMPY (partition on the value axis): interpreted
+            # work per batch is O(k·|queries|) appends, never
+            # O(batch·|queries|). Selection keeps every row TIED with
+            # the k-th value — value-only partitioning may otherwise
+            # drop the boundary tie the (cos desc, id asc) total order
+            # prefers; the deterministic sort resolves ties later.
+            scores[nids[:, None] == q_ids[None, :]] = -np.inf
+            # nan=-inf ONLY: nan_to_num's defaults also rewrite ±inf to
+            # the finite float64 extremes, which would turn the -inf
+            # sentinel into a "real" score that survives the != -inf
+            # guard below (leaking self-pairs at cos ≈ -1.8e308
+            # whenever a query has fewer than k scoreable neighbors)
+            scores = np.nan_to_num(scores, nan=-np.inf, posinf=np.inf, neginf=-np.inf)
+            take = min(k, len(nids))
+            kth = -np.partition(-scores, take - 1, axis=0)[take - 1, :]
+            for j, qid in enumerate(q_ids):
+                pool = best[int(qid)]
+                for i in np.nonzero(scores[:, j] >= kth[j])[0]:
+                    s = scores[i, j]
+                    if s != -np.inf:
+                        pool.append((float(s), int(nids[i])))
+                # keep the pool bounded: top-k under the STRICT total
+                # order (cos desc, id asc) — safe to prune mid-stream
+                if len(pool) > 4 * k:
+                    best[int(qid)] = sorted(pool, key=lambda t: (-t[0], t[1]))[:k]
+        out = [
+            (qid, nid, s)
+            for qid, pool in best.items()
+            for s, nid in sorted(pool, key=lambda t: (-t[0], t[1]))[:k]
+        ]
+        yield pd.DataFrame(
+            out, columns=["query_id", "neighbor_id", "__cos"]
+        ).astype({"query_id": "int64", "neighbor_id": "int64", "__cos": "float64"})
+
+    cands = stream.mapInPandas(
+        prune, f"query_id {id_type}, neighbor_id {id_type}, __cos double"
+    )
+    return _rank_topk(cands, k)
+
+
 def topk_cosine(
     corpus: DataFrame,
     queries: DataFrame,
@@ -190,19 +329,7 @@ def topk_cosine(
             "__cos", dot(F.col("__qv"), F.col("__cv")) / (F.col("__qn") * F.col("__cn"))
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("__cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(F.col("__cos"), 6).alias("cos_sim"),
-            "rank",
-        )
-    )
+    return _rank_topk(scored, k)
 
 
 def topk_cosine_arrow(
@@ -275,19 +402,7 @@ def topk_cosine_arrow(
     scored = c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id")).select(
         "query_id", "neighbor_id", _cos_batch(F.col("__qv"), F.col("__cv")).alias("__cos")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("__cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(F.col("__cos"), 6).alias("cos_sim"),
-            "rank",
-        )
-    )
+    return _rank_topk(scored, k)
 
 
 def quantize_int8(vec: Column) -> Column:
@@ -370,36 +485,29 @@ def topk_cosine_mapside(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 10,
-    max_query_rows: int = 200_000,
+    max_query_rows: int = _MAX_QUERY_ROWS,
 ) -> DataFrame:
     """Exact top-k cosine with MAP-SIDE pruning — the scale form of
     :func:`topk_cosine`'s brute-force plan, same results.
 
     The window-rank plan shuffles EVERY scored (query, neighbor) pair
     to the rank stage: |corpus|·|queries| rows through the exchange.
-    Here each input partition keeps only its own top-k per query
-    (`mapInPandas`: one numpy matmul per Arrow batch, a bounded
-    per-query heap across batches), so the exchange carries at most
-    k·|queries|·num_partitions candidate rows — for 10⁹-row corpora
-    that is the difference between shuffling the corpus and shuffling
-    kilobytes. The global window rank then runs on the tiny candidate
-    relation. Top-k of per-partition top-ks equals global top-k
-    because the (cos DESC, neighbor_id ASC) order is total.
+    Here the shared map-side kernel (:func:`_mapside_topk`: one numpy
+    matmul per Arrow batch, a bounded per-query pool across batches)
+    keeps only each input partition's own top-k per query, so the
+    exchange carries at most k·|queries|·num_partitions candidate rows
+    — for 10⁹-row corpora that is the difference between shuffling the
+    corpus and shuffling kilobytes.
 
     Query vectors ship inside the closure (like IVF centroids: an
     index build side of |queries|·dim floats, collected once — the
     query side must be broadcastable for ANY exact-kNN plan here).
-
-    GUARDRAIL (r15, same contract style as ``bloom_prefilter``'s
-    ``max_bits`` and :func:`cosine_pairs`' ``max_rows``): the query
-    collect is issued through ``limit(max_query_rows + 1)`` so an
-    over-cap query relation short-circuits the scan and raises instead
-    of OOMing the driver and every task that deserializes the closure.
-    The default 200k rows is ~100 MB at 64-dim float64 — already
-    generous for a closure; raise it explicitly only if the driver and
-    executors can hold the matrix, or switch to the window-rank twins
-    (:func:`topk_cosine` / ``topk_cosine_arrow``), which keep the
-    query side distributed.
+    The collect refuses more than ``max_query_rows`` rows (see
+    :func:`_collect_queries`); the default 200k rows is ~100 MB at
+    64-dim float64 — already generous for a closure. Raise it
+    explicitly only if the driver and executors can hold the matrix,
+    or switch to the window-rank twins (:func:`topk_cosine` /
+    ``topk_cosine_arrow``), which keep the query side distributed.
 
     Degenerate-input semantics, where this DIFFERS from the window
     twins: NULL / ragged / zero-norm corpus vectors score NaN and are
@@ -412,106 +520,35 @@ def topk_cosine_mapside(
     """
     import numpy as np
 
-    q_rows = (
-        queries.select(F.col(id_col), to_double(F.col(vec_col)))
-        .filter(F.col(vec_col).isNotNull())
-        .limit(max_query_rows + 1)
-        .collect()
+    q_ids, Q = _collect_queries(
+        queries, id_col, vec_col, "topk_cosine_mapside", max_query_rows
     )
-    if len(q_rows) > max_query_rows:
-        raise ValueError(
-            f"topk_cosine_mapside: query relation exceeds max_query_rows="
-            f"{max_query_rows} — the query matrix ships inside every task "
-            f"closure, so it must stay broadcast-sized. Use the window-rank "
-            f"plans (topk_cosine / topk_cosine_arrow) for large query sets, "
-            f"or raise max_query_rows explicitly if the cluster can hold "
-            f"the matrix."
-        )
-    if not q_rows:
-        return corpus.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, cos_sim double, rank int"
-        )
-    dim = len(q_rows[0][1])
-    q_ids = np.array([r[0] for r in q_rows if len(r[1]) == dim])
-    Q = np.array([list(r[1]) for r in q_rows if len(r[1]) == dim], dtype=np.float64)
+    if not len(q_ids):
+        return _empty_topk(corpus.sparkSession)
+    dim = Q.shape[1]
     Q_norm = np.sqrt(np.einsum("ij,ij->i", Q, Q))
 
-    def prune(batches):
-        import pandas as pd  # noqa: PLC0415 — worker-side import
-
-        # per-query bounded candidate pools, maintained across every
-        # Arrow batch of THIS partition
-        best: dict[int, list[tuple[float, int]]] = {int(qid): [] for qid in q_ids}
-        for pdf in batches:
-            ids = pdf["__nid"].to_numpy()
-            vecs = pdf["__cv"].to_numpy()
-            valid = [
-                i for i in range(len(ids))
-                if vecs[i] is not None and len(vecs[i]) == dim
-            ]
-            if not valid:
-                continue
-            C = np.stack([np.asarray(vecs[i], dtype=np.float64) for i in valid])
-            valid_ids = ids[valid].astype(np.int64)
-            # same num/den form as topk_cosine_arrow's _cos_batch so
-            # all Python paths agree bit-for-bit after round(6)
-            C_norm = np.sqrt(np.einsum("ij,ij->i", C, C))
-            with np.errstate(invalid="ignore", divide="ignore"):
-                cos = (C @ Q.T) / np.outer(C_norm, Q_norm)  # (batch, queries)
-            # disqualify self-pairs and NaN scores, then select per-query
-            # top-k IN NUMPY (partition on the value axis): interpreted
-            # work per batch is O(k·|queries|) appends, never
-            # O(batch·|queries|). Selection keeps every row TIED with
-            # the k-th value — value-only partitioning may otherwise
-            # drop the boundary tie the (cos desc, id asc) total order
-            # prefers; the deterministic sort resolves ties later.
-            cos[valid_ids[:, None] == q_ids[None, :]] = -np.inf
-            # nan=-inf ONLY: nan_to_num's defaults also rewrite ±inf to
-            # the finite float64 extremes, which would turn the -inf
-            # self-pair sentinel into a "real" score that survives the
-            # != -inf guard below (leaking self-pairs at cos ≈ -1.8e308
-            # whenever a query has fewer than k scoreable neighbors)
-            cos = np.nan_to_num(cos, nan=-np.inf, posinf=np.inf, neginf=-np.inf)
-            take = min(k, cos.shape[0])
-            kth = -np.partition(-cos, take - 1, axis=0)[take - 1, :]
-            for j, qid in enumerate(q_ids):
-                pool = best[int(qid)]
-                for i in np.nonzero(cos[:, j] >= kth[j])[0]:
-                    c = cos[i, j]
-                    if c != -np.inf:
-                        pool.append((float(c), int(valid_ids[i])))
-                # keep the pool bounded: top-k under the STRICT total
-                # order (cos desc, id asc) — safe to prune mid-stream
-                if len(pool) > 4 * k:
-                    best[int(qid)] = sorted(pool, key=lambda t: (-t[0], t[1]))[:k]
-        out = [
-            (int(qid), nid, c)
-            for qid, pool in best.items()
-            for c, nid in sorted(pool, key=lambda t: (-t[0], t[1]))[:k]
+    def score_batch(pdf):
+        ids = pdf["__nid"].to_numpy()
+        vecs = pdf["__cv"].to_numpy()
+        valid = [
+            i for i in range(len(ids))
+            if vecs[i] is not None and len(vecs[i]) == dim
         ]
-        yield pd.DataFrame(
-            out, columns=["query_id", "neighbor_id", "__cos"]
-        ).astype({"query_id": "int64", "neighbor_id": "int64", "__cos": "float64"})
+        if not valid:
+            return None
+        C = np.stack([np.asarray(vecs[i], dtype=np.float64) for i in valid])
+        # same num/den form as topk_cosine_arrow's _cos_batch so all
+        # Python paths agree bit-for-bit after round(6)
+        C_norm = np.sqrt(np.einsum("ij,ij->i", C, C))
+        with np.errstate(invalid="ignore", divide="ignore"):
+            cos = (C @ Q.T) / np.outer(C_norm, Q_norm)  # (batch, queries)
+        return ids[valid].astype(np.int64), cos
 
     c = corpus.select(
         F.col(id_col).alias("__nid"), to_double(F.col(vec_col)).alias("__cv")
     )
-    cands = c.mapInPandas(
-        prune, "query_id long, neighbor_id long, __cos double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("__cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(F.col("__cos"), 6).alias("cos_sim"),
-            "rank",
-        )
-    )
+    return _mapside_topk(c, q_ids, k, score_batch)
 
 
 def cosine_pairs(
@@ -993,19 +1030,7 @@ def ivf_search(
         # a vector can reach a query through only one cell (corpus rows
         # are single-assigned), so no pair dedup is needed
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("__cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(F.col("__cos"), 6).alias("cos_sim"),
-            "rank",
-        )
-    )
+    return _rank_topk(scored, k)
 
 
 def ivf_topk_cosine(
@@ -1051,9 +1076,7 @@ def ivf_topk_cosine(
     if cent_unit is None:
         # empty corpus → empty result with the contract schema, like
         # the rest of the operator surface (no driver-side crash)
-        return corpus.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, cos_sim double, rank int"
-        )
+        return _empty_topk(corpus.sparkSession)
     inv_file = ivf_assign(
         corpus, cent_unit, id_col=id_col, vec_col=vec_col,
         out_id="neighbor_id", keep_vec="__cv", top_cells=1,
@@ -1087,14 +1110,13 @@ def lsh_topk_cosine_mapside(
     bucket UDF → join → distinct exchange → rank exchange) is almost
     entirely fixed latency when the query side is broadcast-scale,
     which it already must be for every exact-kNN plan here. This form
-    ships the query matrix AND its bucket signature inside one
-    ``mapInPandas`` closure: per Arrow batch, bucket the corpus rows
-    (numpy — the SAME floor(round((a/n)·G/w, 9)) expression the
-    bucket UDF and the SQL restatement compute), mask the batch×query
-    cosine matrix to co-bucketed pairs (collision in ANY table — the
-    OR-amplification needs no dedup because each pair is scored once),
-    and keep per-partition bounded top-k pools exactly like
-    :func:`topk_cosine_mapside`. The exchange carries at most
+    ships the query matrix AND its bucket signature to the shared
+    map-side kernel (:func:`_mapside_topk`); its per-batch scorer
+    buckets the corpus rows (numpy — the SAME floor(round((a/n)·G/w,
+    9)) expression the bucket UDF and the SQL restatement compute) and
+    holds every cosine outside a co-bucketed pair (collision in ANY
+    table — the OR-amplification needs no dedup because each pair is
+    scored once) at -inf. The exchange carries at most
     k·|queries|·partitions candidate rows; the global rank runs on
     that tiny relation. Measured at sf0.1: 1.96 s → 0.45 s min-of-3,
     byte-identical rows.
@@ -1104,15 +1126,16 @@ def lsh_topk_cosine_mapside(
     ±probe_width neighborhood the join form explodes on the query
     side, as a mask predicate instead of extra rows.
 
-    Degenerate-input semantics follow :func:`topk_cosine_mapside`, not
-    the join form: NULL / ragged / zero-norm corpus vectors are
-    DROPPED (they can never score a finite cosine) rather than raising
-    on ragged input — the probe job that diagnosis costs is exactly
-    the latency this form deletes. Null/wrong-width QUERY vectors are
-    skipped. At 100 TB the corpus side remains a single narrow
-    embarrassingly-parallel pass; the broadcast is |queries|·(dim+T)
-    values — index-build scale, same budget class as the IVF centroid
-    and exact-kNN closures.
+    Degenerate-input semantics are the kernel's, not the join form's:
+    NULL / ragged / zero-norm corpus vectors are DROPPED (they can
+    never score a finite cosine) rather than raising on ragged input —
+    the probe job that diagnosis costs is exactly the latency this
+    form deletes. Null/wrong-width QUERY vectors are skipped, and the
+    query collect carries the kernel's row cap
+    (:func:`_collect_queries`). At 100 TB the corpus side remains a
+    single narrow embarrassingly-parallel pass; the broadcast is
+    |queries|·(dim+T) values — index-build scale, same budget class as
+    the IVF centroid and exact-kNN closures.
     """
     import numpy as np
 
@@ -1121,102 +1144,55 @@ def lsh_topk_cosine_mapside(
             f"lsh_topk_cosine_mapside: probe_width must be >= 0, got {probe_width}"
         )
     id_type = corpus.schema[id_col].dataType.simpleString()
-    out_schema = (
-        f"query_id {id_type}, neighbor_id {id_type}, __cos double"
+    q_ids, Q = _collect_queries(
+        queries, id_col, vec_col, "lsh_topk_cosine_mapside", _MAX_QUERY_ROWS
     )
-    q_rows = (
-        queries.select(F.col(id_col), to_double(F.col(vec_col)))
-        .filter(F.col(vec_col).isNotNull())
-        .collect()
-    )
-    if not q_rows:
-        return corpus.sparkSession.createDataFrame(
-            [], f"query_id {id_type}, neighbor_id {id_type}, cos_sim double, rank int"
-        )
-    dim = len(q_rows[0][1])
-    rows = [r for r in q_rows if len(r[1]) == dim]
-    q_ids = np.array([r[0] for r in rows], dtype=np.int64)
-    Q = np.array([list(r[1]) for r in rows], dtype=np.float64)
     Q_norm = np.sqrt(np.einsum("ij,ij->i", Q, Q))
     keep = Q_norm > 0  # zero-norm queries can never score a cosine
     q_ids, Q, Q_norm = q_ids[keep], Q[keep], Q_norm[keep]
     if not len(q_ids):
-        return corpus.sparkSession.createDataFrame(
-            [], f"query_id {id_type}, neighbor_id {id_type}, cos_sim double, rank int"
-        )
+        return _empty_topk(corpus.sparkSession, id_type)
+    dim = Q.shape[1]
     G = seeded_unit_directions(dim, num_hash_tables, seed)
     w = float(bucket_length)
     QB = np.floor(np.round((Q / Q_norm[:, None]) @ G / w, 9)).astype(np.int64)
     pw = int(probe_width)
 
-    def prune(batches):
-        import pandas as pd  # noqa: PLC0415 — worker-side import
-
-        best: dict[int, list[tuple[float, int]]] = {int(qid): [] for qid in q_ids}
-        for pdf in batches:
-            ids = pdf["__nid"].to_numpy()
-            vecs = pdf["__cv"].to_numpy()
-            valid = [
-                i for i in range(len(ids))
-                if vecs[i] is not None and len(vecs[i]) == dim
-            ]
-            if not valid:
-                continue
-            C = np.stack([np.asarray(vecs[i], dtype=np.float64) for i in valid])
-            vid = ids[valid].astype(np.int64)
-            C_norm = np.sqrt(np.einsum("ij,ij->i", C, C))
-            nz = C_norm > 0
-            C, vid, C_norm = C[nz], vid[nz], C_norm[nz]
-            if not len(vid):
-                continue
-            # corpus buckets: the shared oracle expression, batch-wide
-            B = np.floor(
-                np.round((C / C_norm[:, None]) @ G / w, 9)
-            ).astype(np.int64)
-            if pw:
-                collide = (
-                    np.abs(B[:, None, :] - QB[None, :, :]) <= pw
-                ).any(axis=2)
-            else:
-                collide = (B[:, None, :] == QB[None, :, :]).any(axis=2)
-            with np.errstate(invalid="ignore", divide="ignore"):
-                cos = (C @ Q.T) / np.outer(C_norm, Q_norm)
-            cos[~collide] = -np.inf
-            cos[vid[:, None] == q_ids[None, :]] = -np.inf
-            cos = np.nan_to_num(cos, nan=-np.inf, posinf=np.inf, neginf=-np.inf)
-            take = min(k, cos.shape[0])
-            kth = -np.partition(-cos, take - 1, axis=0)[take - 1, :]
-            for j, qid in enumerate(q_ids):
-                pool = best[int(qid)]
-                for i in np.nonzero(cos[:, j] >= kth[j])[0]:
-                    c = cos[i, j]
-                    if c != -np.inf:
-                        pool.append((float(c), int(vid[i])))
-                if len(pool) > 4 * k:
-                    best[int(qid)] = sorted(pool, key=lambda t: (-t[0], t[1]))[:k]
-        out = [
-            (int(qid), nid, c)
-            for qid, pool in best.items()
-            for c, nid in sorted(pool, key=lambda t: (-t[0], t[1]))[:k]
+    def score_batch(pdf):
+        ids = pdf["__nid"].to_numpy()
+        vecs = pdf["__cv"].to_numpy()
+        valid = [
+            i for i in range(len(ids))
+            if vecs[i] is not None and len(vecs[i]) == dim
         ]
-        yield pd.DataFrame(out, columns=["query_id", "neighbor_id", "__cos"])
+        if not valid:
+            return None
+        C = np.stack([np.asarray(vecs[i], dtype=np.float64) for i in valid])
+        vid = ids[valid].astype(np.int64)
+        C_norm = np.sqrt(np.einsum("ij,ij->i", C, C))
+        nz = C_norm > 0
+        C, vid, C_norm = C[nz], vid[nz], C_norm[nz]
+        if not len(vid):
+            return None
+        # corpus buckets: the shared oracle expression, batch-wide
+        B = np.floor(
+            np.round((C / C_norm[:, None]) @ G / w, 9)
+        ).astype(np.int64)
+        if pw:
+            collide = (
+                np.abs(B[:, None, :] - QB[None, :, :]) <= pw
+            ).any(axis=2)
+        else:
+            collide = (B[:, None, :] == QB[None, :, :]).any(axis=2)
+        with np.errstate(invalid="ignore", divide="ignore"):
+            cos = (C @ Q.T) / np.outer(C_norm, Q_norm)
+        cos[~collide] = -np.inf
+        return vid, cos
 
-    cand = corpus.select(
+    c = corpus.select(
         F.col(id_col).alias("__nid"), to_double(F.col(vec_col)).alias("__cv")
-    ).mapInPandas(prune, schema=out_schema)
-    wnd = Window.partitionBy("query_id").orderBy(
-        F.col("__cos").desc(), F.col("neighbor_id")
     )
-    return (
-        cand.withColumn("rank", F.row_number().over(wnd))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(F.col("__cos"), 6).alias("cos_sim"),
-            "rank",
-        )
-    )
+    return _mapside_topk(c, q_ids, k, score_batch, id_type)
 
 
 def lsh_topk_cosine(
@@ -1316,10 +1292,7 @@ def lsh_topk_cosine(
                     f"one dimension (pad/truncate/filter) first."
                 )
         if not probed["corpus"]:
-            return corpus.sparkSession.createDataFrame(
-                [],
-                f"query_id {id_type}, neighbor_id {id_type}, cos_sim double, rank int",
-            )
+            return _empty_topk(corpus.sparkSession, id_type)
         dim = probed["corpus"][0]
         if probed["queries"] and probed["queries"][0] != dim:
             raise ValueError(
@@ -1414,19 +1387,7 @@ def lsh_topk_cosine(
         )
         .distinct()
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("__cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(F.col("__cos"), 6).alias("cos_sim"),
-            "rank",
-        )
-    )
+    return _rank_topk(scored, k)
 
 
 def pq_topk_cosine(
@@ -1483,9 +1444,7 @@ def pq_topk_cosine(
         train_sample=train_sample,
     )
     if books is None:
-        return corpus.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, cos_sim double, rank int"
-        )
+        return _empty_topk(corpus.sparkSession)
     codes = encode_pq(corpus, books, id_col=id_col, vec_col=vec_col)
     return adc_topk(codes, books, queries, id_col=id_col, vec_col=vec_col, k=k)
 
@@ -1495,6 +1454,38 @@ def _unit_rows(mat):
 
     n = np.linalg.norm(mat, axis=1, keepdims=True)
     return mat / np.where(n == 0.0, 1.0, n)
+
+
+def _adc_scorer(Q, books):
+    """The ADC per-batch scorer for :func:`_mapside_topk`, over a
+    ``(__nid, __codes, ...)`` stream: a coded vector's approximate
+    cosine to unit query row q is sum_s LUT[q, s, code_s], rounded to
+    9 decimals so ranking matches the oracle's SQL sums."""
+    import numpy as np
+
+    n_subspaces, _, sub_dim = books.shape
+    # LUT[q, s, c] = q_sub(s) . codeword(s, c) (both sides unit-normalized)
+    lut = np.stack(
+        [
+            Q[:, s * sub_dim : (s + 1) * sub_dim] @ books[s].T
+            for s in range(n_subspaces)
+        ],
+        axis=1,
+    )  # (|queries|, n_subspaces, n_codes)
+    subspaces = np.arange(n_subspaces)[None, :]
+
+    def score_batch(pdf):
+        ids = pdf["__nid"].to_numpy().astype(np.int64)
+        if not len(ids):
+            return None
+        codes = np.stack(
+            [np.asarray(c, dtype=np.int64) for c in pdf["__codes"].to_numpy()]
+        )
+        # gather: scores[q, row] = sum_s lut[q, s, codes[row, s]]
+        scores = np.round(lut[:, subspaces, codes].sum(axis=2), 9)
+        return ids, scores.T
+
+    return score_batch
 
 
 def train_pq_codebooks(
@@ -1685,91 +1676,24 @@ def adc_topk(
     k: int = 10,
 ) -> DataFrame:
     """Asymmetric-distance top-k over a (possibly stored) PQ codes
-    relation. Mirrors :func:`topk_cosine_mapside`: mapInPandas over
-    the CODES relation, per-partition bounded top-k pools per query
-    (numpy LUT gather per Arrow batch), exchange carries
-    ≤ k·|queries|·partitions candidates, global window rank on that
-    tiny relation. ADC scores are rounded to 9 decimals BEFORE ranking
-    so the oracle's sequential-fold sums rank identically to numpy's
-    gathers. The per-query LUT tensor is an index-build collect:
-    |queries|·n_subspaces·n_codes doubles — kilobytes."""
-    import numpy as np
-
+    relation: the shared map-side kernel (:func:`_mapside_topk`) over
+    the CODES relation, scoring each Arrow batch with one numpy LUT
+    gather (:func:`_adc_scorer`); the exchange carries
+    ≤ k·|queries|·partitions candidates, and the global window rank
+    runs on that tiny relation. ADC scores are rounded to 9 decimals
+    BEFORE ranking so the oracle's sequential-fold sums rank
+    identically to numpy's gathers. The per-query LUT tensor is an
+    index-build collect: |queries|·n_subspaces·n_codes doubles —
+    kilobytes; the query collect carries the kernel's row cap
+    (:func:`_collect_queries`)."""
     n_subspaces, _, sub_dim = books.shape
-    dim = n_subspaces * sub_dim
-    q_rows = (
-        queries.select(F.col(id_col), to_double(F.col(vec_col)))
-        .filter(F.col(vec_col).isNotNull())
-        .collect()
+    q_ids, Q = _collect_queries(
+        queries, id_col, vec_col, "adc_topk", _MAX_QUERY_ROWS,
+        dim=n_subspaces * sub_dim,
     )
-    q_rows = [r for r in q_rows if len(r[1]) == dim]
-    if not q_rows:
-        return codes_df.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, cos_sim double, rank int"
-        )
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    Q = _unit_rows(np.array([list(r[1]) for r in q_rows], dtype=np.float64))
-    # LUT[q, s, c] = q_sub(s) . codeword(s, c); approx cosine of a coded
-    # vector is sum_s LUT[q, s, code_s] (both sides unit-normalized)
-    lut = np.stack(
-        [
-            Q[:, s * sub_dim : (s + 1) * sub_dim] @ books[s].T
-            for s in range(n_subspaces)
-        ],
-        axis=1,
-    )  # (|queries|, n_subspaces, n_codes)
-
-    def adc(batches):
-        import numpy as np  # noqa: PLC0415 — worker-side
-        import pandas as pd  # noqa: PLC0415
-
-        best: dict[int, list[tuple[float, int]]] = {int(q): [] for q in q_ids}
-        for pdf in batches:
-            ids = pdf["__nid"].to_numpy()
-            codes = np.stack(
-                [np.asarray(c, dtype=np.int64) for c in pdf["__codes"].to_numpy()]
-            ) if len(pdf) else np.empty((0, n_subspaces), dtype=np.int64)
-            if not len(ids):
-                continue
-            # gather: scores[q, row] = sum_s lut[q, s, codes[row, s]];
-            # rounded to 9 so ranking matches the oracle's SQL sums
-            scores = np.round(
-                lut[:, np.arange(n_subspaces)[None, :], codes].sum(axis=2), 9
-            )
-            scores[q_ids[:, None] == ids[None, :].astype(np.int64)] = -np.inf
-            take = min(k, scores.shape[1])
-            kth = -np.partition(-scores, take - 1, axis=1)[:, take - 1]
-            for qi, qid in enumerate(q_ids):
-                pool = best[int(qid)]
-                for i in np.nonzero(scores[qi] >= kth[qi])[0]:
-                    sc = scores[qi, i]
-                    if sc != -np.inf:
-                        pool.append((float(sc), int(ids[i])))
-                if len(pool) > 4 * k:
-                    best[int(qid)] = sorted(pool, key=lambda t: (-t[0], t[1]))[:k]
-        out = [
-            (int(qid), nid, c)
-            for qid, pool in best.items()
-            for c, nid in sorted(pool, key=lambda t: (-t[0], t[1]))[:k]
-        ]
-        yield pd.DataFrame(
-            out, columns=["query_id", "neighbor_id", "__cos"]
-        ).astype({"query_id": "int64", "neighbor_id": "int64", "__cos": "float64"})
-
-    cands = codes_df.mapInPandas(adc, "query_id long, neighbor_id long, __cos double")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("__cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(F.col("__cos"), 6).alias("cos_sim"),
-            "rank",
-        )
-    )
+    if not len(q_ids):
+        return _empty_topk(codes_df.sparkSession)
+    return _mapside_topk(codes_df, q_ids, k, _adc_scorer(_unit_rows(Q), books))
 
 
 def encode_ivfpq(
@@ -1871,37 +1795,31 @@ def ivfpq_adc_topk(
 ) -> DataFrame:
     """ADC top-k over an IVF-PQ index relation (:func:`encode_ivfpq`'s
     (__nid, __codes, __cell)): each query scores ONLY candidates whose
-    cell is among its ``n_probe`` nearest — the cell prune applied as
-    a mask predicate inside the same one-pass mapInPandas shape as
-    :func:`adc_topk` (the `lsh_topk_cosine_mapside` trick: broadcast
-    the per-query probe-set matrix in the closure instead of exploding
-    a probe join). Per Arrow batch: one LUT gather for the scores, one
-    boolean gather for the mask; per-partition bounded top-k pools;
-    the exchange carries ≤ k·|queries|·partitions candidate rows.
+    cell is among its ``n_probe`` nearest — :func:`adc_topk`'s LUT
+    gather with the cell prune applied as a mask inside the same
+    shared map-side kernel (:func:`_mapside_topk`; the
+    `lsh_topk_cosine_mapside` trick: broadcast the per-query probe-set
+    matrix in the closure instead of exploding a probe join). Per
+    Arrow batch: one LUT gather for the scores, one boolean gather for
+    the mask; the exchange carries ≤ k·|queries|·partitions candidate
+    rows.
 
     Probe cells are computed driver-side from the (broadcast-scale by
-    contract) query set with the exact :func:`ivf_assign` rounding
-    rules — round-9 affinities, stable argsort, ties → lowest cell —
-    so the DuckDB oracle's probe CTE reproduces them bit-for-bit.
+    contract, row-capped by :func:`_collect_queries`) query set with
+    the exact :func:`ivf_assign` rounding rules — round-9 affinities,
+    stable argsort, ties → lowest cell — so the DuckDB oracle's probe
+    CTE reproduces them bit-for-bit.
     """
     import numpy as np
 
     n_subspaces, _, sub_dim = books.shape
-    dim = n_subspaces * sub_dim
-    q_rows = (
-        queries.select(F.col(id_col), to_double(F.col(vec_col)))
-        .filter(F.col(vec_col).isNotNull())
-        .collect()
+    q_ids, Q = _collect_queries(
+        queries, id_col, vec_col, "ivfpq_adc_topk", _MAX_QUERY_ROWS,
+        dim=n_subspaces * sub_dim,
     )
-    q_rows = [r for r in q_rows if len(r[1]) == dim]
-    if not q_rows:
-        return index_df.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, cos_sim double, rank int"
-        )
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    Qraw = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
-    qn = np.linalg.norm(Qraw, axis=1, keepdims=True)
-    Q = Qraw / np.where(qn == 0.0, 1.0, qn)
+    if not len(q_ids):
+        return _empty_topk(index_df.sparkSession)
+    Q = _unit_rows(Q)
     # probe matrix P[q, cell-1]: True iff cell is among the query's
     # n_probe nearest (round-9 affinity, stable argsort = cell asc ties)
     aff = np.round(Q @ cent_unit.T, 9)
@@ -1909,67 +1827,20 @@ def ivfpq_adc_topk(
     n_cells = cent_unit.shape[0]
     P = np.zeros((len(q_ids), n_cells), dtype=bool)
     P[np.arange(len(q_ids))[:, None], order[:, : min(n_probe, n_cells)]] = True
-    lut = np.stack(
-        [
-            Q[:, s * sub_dim : (s + 1) * sub_dim] @ books[s].T
-            for s in range(n_subspaces)
-        ],
-        axis=1,
-    )  # (|queries|, n_subspaces, n_codes)
+    adc = _adc_scorer(Q, books)
 
-    def adc(batches):
-        import numpy as np  # noqa: PLC0415 — worker-side
-        import pandas as pd  # noqa: PLC0415
+    def score_batch(pdf):
+        scored = adc(pdf)
+        if scored is None:
+            return None
+        ids, scores = scored
+        # the IVF prune: a candidate is visible to a query only if its
+        # (single-assignment) cell is in the query's probe set
+        cells = pdf["__cell"].to_numpy().astype(np.int64) - 1
+        scores[~P[:, cells].T] = -np.inf
+        return ids, scores
 
-        best: dict[int, list[tuple[float, int]]] = {int(q): [] for q in q_ids}
-        for pdf in batches:
-            ids = pdf["__nid"].to_numpy()
-            if not len(ids):
-                continue
-            codes = np.stack(
-                [np.asarray(c, dtype=np.int64) for c in pdf["__codes"].to_numpy()]
-            )
-            cells = pdf["__cell"].to_numpy().astype(np.int64) - 1
-            scores = np.round(
-                lut[:, np.arange(n_subspaces)[None, :], codes].sum(axis=2), 9
-            )
-            # the IVF prune: a candidate is visible to a query only if
-            # its (single-assignment) cell is in the query's probe set
-            scores[~P[:, cells]] = -np.inf
-            scores[q_ids[:, None] == ids[None, :].astype(np.int64)] = -np.inf
-            take = min(k, scores.shape[1])
-            kth = -np.partition(-scores, take - 1, axis=1)[:, take - 1]
-            for qi, qid in enumerate(q_ids):
-                pool = best[int(qid)]
-                for i in np.nonzero(scores[qi] >= kth[qi])[0]:
-                    sc = scores[qi, i]
-                    if sc != -np.inf:
-                        pool.append((float(sc), int(ids[i])))
-                if len(pool) > 4 * k:
-                    best[int(qid)] = sorted(pool, key=lambda t: (-t[0], t[1]))[:k]
-        out = [
-            (int(qid), nid, c)
-            for qid, pool in best.items()
-            for c, nid in sorted(pool, key=lambda t: (-t[0], t[1]))[:k]
-        ]
-        yield pd.DataFrame(
-            out, columns=["query_id", "neighbor_id", "__cos"]
-        ).astype({"query_id": "int64", "neighbor_id": "int64", "__cos": "float64"})
-
-    cands = index_df.mapInPandas(adc, "query_id long, neighbor_id long, __cos double")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("__cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(F.col("__cos"), 6).alias("cos_sim"),
-            "rank",
-        )
-    )
+    return _mapside_topk(index_df, q_ids, k, score_batch)
 
 
 def ivfpq_topk(
@@ -2022,9 +1893,7 @@ def ivfpq_topk(
         )
         cent, books = cent_f.result(), books_f.result()
     if cent is None or books is None:
-        return corpus.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, cos_sim double, rank int"
-        )
+        return _empty_topk(corpus.sparkSession)
     index = encode_ivfpq(corpus, books, cent, id_col=id_col, vec_col=vec_col)
     return ivfpq_adc_topk(
         index, books, cent, queries,

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from .functions.message import parse_messages, serialize_message
 from .operators.dedup import dedup_last_write_wins
 from .sources.kafka import KafkaSourceConfig, read_kafka_batch, read_kafka_stream
-from .sources.sinks import stream_json_lines, write_json_lines
+from .sources.sinks import write_json_lines
 
 
 def dedup_pipeline(messages: DataFrame) -> DataFrame:
@@ -87,10 +87,7 @@ def run_streaming(
         from .streaming.dedup import stateful_lww_dedup
 
         parsed = dedup_pipeline_parse_only(src)
-        winners = stateful_lww_dedup(parsed)
-        out = winners.select(
-            serialize_message(F.col("id"), F.col("msg")).alias("value")
-        )
+        out = serialize_output(stateful_lww_dedup(parsed))
 
         # file sinks support append only, so update-mode output goes
         # through foreachBatch: each epoch's new winners land in their

@@ -505,16 +505,31 @@ def test_contamination_hits_semantics(spark):
     assert out == {1: 1, 2: 1}
 
 
-def test_mapside_topk_matches_window_with_boundary_ties(spark):
+# A bucket length so wide that |v̂·g/w| < 5e-10 rounds to 0 in every
+# table: every pair collides, so the LSH map-side form must answer
+# exactly like the exact kernel and the window twin.
+_ALL_COLLIDE = 1e10
+
+
+def _mapside_op(name):
+    import functools
+
+    from new_kafka_consumer_to_hadoop_hdfs_spark.operators import similarity
+
+    op = getattr(similarity, name)
+    if name == "lsh_topk_cosine_mapside":
+        return functools.partial(op, bucket_length=_ALL_COLLIDE)
+    return op
+
+
+@pytest.mark.parametrize("op", ["topk_cosine_mapside", "lsh_topk_cosine_mapside"])
+def test_mapside_topk_matches_window_with_boundary_ties(spark, op):
     """Map-side pruning must survive score ties at the selection
     boundary across partitions: duplicate vectors produce equal
     cosines, and the (cos desc, id asc) winner must match the window
     twin exactly — a value-only partition that drops the id-preferred
     tie would diverge here."""
-    from new_kafka_consumer_to_hadoop_hdfs_spark.operators.similarity import (
-        topk_cosine,
-        topk_cosine_mapside,
-    )
+    mapside = _mapside_op(op)
 
     # vec 0 = query; vecs 1..8 are four tied pairs (identical vectors),
     # k=3 cuts through the middle pair of a tie group
@@ -527,7 +542,7 @@ def test_mapside_topk_matches_window_with_boundary_ties(spark):
     want = [(r.query_id, r.neighbor_id, r.cos_sim, r.rank)
             for r in topk_cosine(df, q, k=3).orderBy("rank").collect()]
     got = [(r.query_id, r.neighbor_id, r.cos_sim, r.rank)
-           for r in topk_cosine_mapside(df, q, k=3).orderBy("rank").collect()]
+           for r in mapside(df, q, k=3).orderBy("rank").collect()]
     assert got == want
     assert [g[1] for g in got] == [1, 2, 3]  # tie at rank 2/3 → smaller id first
 
@@ -558,21 +573,20 @@ def test_ivf_kmeans_refinement_recall_and_determinism(spark, sf_dir):
             assert abs(r.cos_sim - exact[(r.query_id, r.neighbor_id)]) < 1e-9
 
 
-def test_mapside_topk_no_self_pair_leak_under_k(spark):
+@pytest.mark.parametrize("op", ["topk_cosine_mapside", "lsh_topk_cosine_mapside"])
+def test_mapside_topk_no_self_pair_leak_under_k(spark, op):
     """A query with fewer than k scoreable neighbors must NOT emit a
     self-pair with a sentinel score (regression: nan_to_num's default
     ±inf rewrite turned the -inf self-pair marker into a finite
     'score')."""
-    from new_kafka_consumer_to_hadoop_hdfs_spark.operators.similarity import (
-        topk_cosine_mapside,
-    )
+    mapside = _mapside_op(op)
 
     df = spark.createDataFrame(
         [(0, [1.0, 0.0]), (1, [0.9, 0.1]), (2, [0.1, 0.9])],
         "vec_id long, embedding array<double>",
     )
     q = df.filter(F.col("vec_id") == 0)
-    rows = topk_cosine_mapside(df, q, k=10).collect()
+    rows = mapside(df, q, k=10).collect()
     assert {r.neighbor_id for r in rows} == {1, 2}  # no self, no sentinel
     assert all(r.cos_sim > -2.0 for r in rows)
 
@@ -1647,26 +1661,76 @@ def test_gram_multiset_counts_null_array(spark):
     assert got == {1: (2, 2, 2), 2: (0, 0, 0), 3: (0, 0, 0)}
 
 
-def test_mapside_topk_refuses_oversized_query_set(spark):
-    """topk_cosine_mapside ships the query matrix in every task closure,
-    so an over-cap query relation must refuse at plan construction
-    (limit(max+1) short-circuits the scan) instead of OOMing — the
-    bloom_prefilter(max_bits=...) contract style (VERDICT r14 item 5)."""
+@pytest.mark.parametrize(
+    "op", ["topk_cosine_mapside", "lsh_topk_cosine_mapside", "adc_topk", "ivfpq_adc_topk"]
+)
+def test_mapside_topk_refuses_oversized_query_set(spark, op, monkeypatch):
+    """The broadcast-query operators ship the query matrix in every
+    task closure, so an over-cap query relation must refuse at plan
+    construction (limit(max+1) short-circuits the scan) instead of
+    OOMing — the bloom_prefilter(max_bits=...) contract style (VERDICT
+    r14 item 5). topk_cosine_mapside takes the cap as max_query_rows;
+    the others share the module constant."""
     import pytest as _pytest
 
-    from new_kafka_consumer_to_hadoop_hdfs_spark.operators.similarity import (
-        topk_cosine_mapside,
-    )
+    from new_kafka_consumer_to_hadoop_hdfs_spark.operators import similarity
 
     vecs = spark.createDataFrame(
         [(i, [float(i), 1.0]) for i in range(6)],
         "vec_id long, embedding array<double>",
     )
+    books = similarity.train_pq_codebooks(
+        vecs, n_subspaces=2, n_codes=2, refine_iterations=0
+    )
+    cent = similarity.train_ivf_centroids(vecs, n_cells=2)
+    default = similarity._MAX_QUERY_ROWS
+
+    def search(cap):
+        if op == "topk_cosine_mapside":
+            return similarity.topk_cosine_mapside(vecs, vecs, k=2, max_query_rows=cap)
+        monkeypatch.setattr(similarity, "_MAX_QUERY_ROWS", cap)
+        if op == "lsh_topk_cosine_mapside":
+            return similarity.lsh_topk_cosine_mapside(vecs, vecs, k=2)
+        if op == "adc_topk":
+            return similarity.adc_topk(similarity.encode_pq(vecs, books), books, vecs, k=2)
+        index = similarity.encode_ivfpq(vecs, books, cent)
+        return similarity.ivfpq_adc_topk(index, books, cent, vecs, k=2)
+
     with _pytest.raises(ValueError, match="max_query_rows"):
-        topk_cosine_mapside(vecs, vecs, k=2, max_query_rows=3)
+        search(3)
     # under the cap the guarded plan is the same operator, same results
-    out = topk_cosine_mapside(vecs, vecs, k=2, max_query_rows=6)
-    base = topk_cosine_mapside(vecs, vecs, k=2)
+    out = search(6)
+    base = search(default)
     assert sorted(map(tuple, out.collect())) == sorted(
         map(tuple, base.collect())
     )
+
+
+def test_similarity_driver_collects_are_a_closed_list():
+    """Every driver collect (``.collect()`` / ``.toPandas()``) in
+    operators/similarity.py, by enclosing top-level function. A new
+    site fails here: route a broadcast-query collect through
+    ``_collect_queries`` (row-capped), or add the site with its bound."""
+    import ast
+    import collections
+    import pathlib
+
+    from new_kafka_consumer_to_hadoop_hdfs_spark.operators import similarity
+
+    tree = ast.parse(pathlib.Path(similarity.__file__).read_text())
+    sites = collections.Counter(
+        getattr(top, "name", "<module>")
+        for top in tree.body
+        for node in ast.walk(top)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("collect", "toPandas")
+    )
+    assert sites == {
+        "_probe_dims": 1,  # one row per (side, distinct width)
+        "_collect_queries": 1,  # limit(max_rows + 1), then refuse
+        "cosine_pairs": 1,  # limit(max_rows + 1), then refuse
+        "train_ivf_centroids": 2,  # n_cells seeds; n_cells·dim sums per round
+        "lsh_topk_cosine": 1,  # join form's query side, not yet capped
+        "train_pq_codebooks": 2,  # limit(train_sample), twice if ragged
+    }
