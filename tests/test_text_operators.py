@@ -1671,8 +1671,6 @@ def test_mapside_topk_refuses_oversized_query_set(spark, op, monkeypatch):
     OOMing — the bloom_prefilter(max_bits=...) contract style (VERDICT
     r14 item 5). topk_cosine_mapside takes the cap as max_query_rows;
     the others share the module constant."""
-    import pytest as _pytest
-
     from new_kafka_consumer_to_hadoop_hdfs_spark.operators import similarity
 
     vecs = spark.createDataFrame(
@@ -1696,7 +1694,7 @@ def test_mapside_topk_refuses_oversized_query_set(spark, op, monkeypatch):
         index = similarity.encode_ivfpq(vecs, books, cent)
         return similarity.ivfpq_adc_topk(index, books, cent, vecs, k=2)
 
-    with _pytest.raises(ValueError, match="max_query_rows"):
+    with pytest.raises(ValueError, match="max_query_rows"):
         search(3)
     # under the cap the guarded plan is the same operator, same results
     out = search(6)
